@@ -21,7 +21,8 @@ object StreamingQueries {
     * that sizes a streaming job's STATE partitions (pinned into the
     * checkpoint at the first batch) — set to `n`, restored after.
     * State partitions must scale with STATE SIZE, not the host's CPU
-    * count: the round-15 [[graft.JoinDrainDryRun]] A/B measured the
+    * count: the round-15 A/B (SCALE.md, "Round-15:
+    * q_stream_join_error_purchase attribution") measured the
     * CPU-sized default (32) paying 2.5x the wall of a state-sized 8 on
     * identical results — HDFSBackedStateStore snapshot/delta
     * maintenance is pure per-instance fixed cost × partitions ×
@@ -606,7 +607,8 @@ object StreamingQueries {
       // absorbed by a driver set — a strictly stronger gate.
       val table = s"$tmp/graft_stream_join_tbl_$run"
       // state partitions sized to the STATE, not the host CPU count
-      // (r15 JoinDrainDryRun: 32 partitions × 4 stores × batches of
+      // (SCALE.md "Round-15: q_stream_join_error_purchase
+      // attribution": 32 partitions × 4 stores × batches of
       // HDFSBackedStateStore maintenance cost 2.5x the wall of 8 on
       // identical results) — the per-job sizing every production
       // deployment does through its own session conf

@@ -97,29 +97,6 @@ object Graphs {
       .select(col("e.s").as("s"), col("e.t").as("t"))
   }
 
-  /** Structural diagnostic for the scale dry run: (m, wedges) where m =
-    * canonical edge count and wedges = Σ C(outdeg, 2) over the
-    * degree-ordered orientation — the EXACT row count of the wedge join
-    * inside [[triangles]]. The Suri–Vassilvitskii guarantee is wedges =
-    * O(m^1.5) with no hot key; checking the measured wedge count against
-    * that bound at growing scale is how superlinear fanout would be
-    * caught before wall-clock ever shows it. Two scalars (one aggregate
-    * job) — a model-scale probe, not a data-path collect. */
-  def orientedWedgeStats(edges: DataFrame, srcCol: String,
-      dstCol: String): (Long, Long) = {
-    val e = canonical(edges, col(srcCol), col(dstCol))
-    val row = orient(e).groupBy("s").agg(count(lit(1)).as("od"))
-      .agg(sum(lit(1)).as("srcs"),
-        // integral arithmetic end-to-end: od*(od-1) is even, so integer
-        // `div` is exact — `/` (Divide) would promote to double and
-        // silently lose exactness past 2^53, precisely the regime this
-        // probe polices
-        sum(expr("(od * (od - 1)) div 2")).cast("long").as("wedges"),
-        sum("od").cast("long").as("m"))
-      .head()
-    (row.getAs[Long]("m"), row.getAs[Long]("wedges"))
-  }
-
   /** All triangles (a, b, c) of the undirected graph, each exactly once.
     * Input edges may be directed/duplicated/self-looped — canonicalized
     * first. */
@@ -343,16 +320,7 @@ object Graphs {
     * distances with a bounded-(node, d) recursive closure + min. */
   def ssspDistances(edges: DataFrame, srcCol: String, dstCol: String,
       weightCol: String, source: Long, maxRounds: Int = 64,
-      reliableCheckpoint: Boolean = false): DataFrame =
-    ssspDistancesDetail(edges, srcCol, dstCol, weightCol, source, maxRounds,
-      reliableCheckpoint)._1
-
-  /** [[ssspDistances]] plus the relaxation-round count — the scale
-    * instrumentation face (rounds are the superlinear risk for
-    * iterative graph loops, invisible to single-scale timing). */
-  def ssspDistancesDetail(edges: DataFrame, srcCol: String, dstCol: String,
-      weightCol: String, source: Long, maxRounds: Int = 64,
-      reliableCheckpoint: Boolean = false): (DataFrame, Int) = {
+      reliableCheckpoint: Boolean = false): DataFrame = {
     require(maxRounds >= 1, s"ssspDistances: maxRounds must be >= 1, got $maxRounds")
     def persist(df: DataFrame) =
       if (reliableCheckpoint) df.checkpoint() else df.localCheckpoint()
@@ -407,6 +375,6 @@ object Graphs {
         "maxRounds (weighted diameter exceeds the budget) or check the graph")
     val out = persist(dist)
     (adj +: scratch).foreach(_.unpersist(blocking = false))
-    (out, round)
+    out
   }
 }

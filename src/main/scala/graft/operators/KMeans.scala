@@ -190,8 +190,10 @@ object KMeans {
     // the scan reads ONLY the probed directories. The bucket join
     // alone restricts the same rows semantically, but a broadcast hash
     // join prunes nothing at planning — measured on a 100× corpus, the
-    // probe cost sat flat vs nprobe=k until this filter
-    // (IvfScaleDryRun; SCALE.md). createDataFrame pins the collected
+    // probe cost sat flat vs nprobe=k until this filter (a removed
+    // IvfScaleDryRun that SCALE.md's header says how to recover; the
+    // pruning design is SCALE.md "Round-8 continuation", IVF-PQ
+    // bullet). createDataFrame pins the collected
     // probes so the tiny aggregate runs ONCE, not once per downstream
     // use.
     val spark = corpusAssigned.sparkSession

@@ -215,9 +215,8 @@ object GraftMaintenance {
       .min(Int.MaxValue).toInt
     val df = connectorRead(spark, table)
     val partCols = GraftCatalog.effectivePartCols(table, df.schema)
-    val rows = readFilesWithDeletes(spark, df.schema, files,
-      GraftDeletes.livePositions(table),
-      GraftCatalog.readAliases(table, conf))
+    val rows = readCandidates(spark, table, df.schema, files,
+      GraftDeletes.livePositions(table))
     import org.apache.spark.sql.functions.col
     // hash on the partition columns: each partition's small rows land
     // in ONE task → one packed file per partition directory (a
@@ -317,6 +316,36 @@ object GraftMaintenance {
     }.reduceOption(_.unionByName(_)).getOrElse(empty)
   }
 
+  /** A rewrite's CANDIDATE rows, deletes applied. The candidates were
+    * live when the rewrite planned, but a concurrent rewrite may have
+    * archived one since; Spark checks paths while building the read,
+    * so that failure lands here, before [[rewriteCommit]] validates. */
+  private[graft] def readCandidates(spark: SparkSession, table: String,
+      schema: org.apache.spark.sql.types.StructType,
+      candidates: Seq[String], dv: Map[String, GraftDvBitmap]): DataFrame =
+    conflictIfVanished(table, candidates) {
+      readFilesWithDeletes(spark, schema, candidates, dv,
+        GraftCatalog.readAliases(table, conf))
+    }
+
+  /** Run `body`, which reads the rewrite's `candidates`; a failure while
+    * any candidate is gone means a concurrent rewrite committed — retype
+    * it as the retryable conflict it is. */
+  private def conflictIfVanished[T](table: String,
+      candidates: Seq[String])(body: => T): T =
+    try body catch {
+      case e: Throwable =>
+        val fs = new Path(table).getFileSystem(conf)
+        val vanished = candidates.filterNot(f =>
+          try fs.exists(new Path(f)) catch { case _: Exception => true })
+        if (vanished.nonEmpty) throw new GraftConcurrentWriteException(
+          s"graft rewrite conflict under $table: ${vanished.size} " +
+            s"candidate file(s) vanished mid-read (a concurrent " +
+            "rewrite committed) — re-plan against the new head and " +
+            "retry", e)
+        else throw e
+    }
+
   /** Shared selective-rewrite commit: the REWRITTEN rows replace the
     * CANDIDATE files; every other file is untouched — no data read, no
     * data written, just carried into the new version. Visibility for a
@@ -351,20 +380,10 @@ object GraftMaintenance {
       val w = rewritten.write
         .format("graft.sources.GraftParquetTableProvider")
         .option("path", tmp).mode(org.apache.spark.sql.SaveMode.Append)
-      try {
+      conflictIfVanished(table, candidates) {
         (if (partCols.nonEmpty)
           w.option("partitionBy", partCols.mkString(","))
         else w).save()
-      } catch {
-        case e: Throwable =>
-          val vanished = candidates.filterNot(f =>
-            try fs.exists(new Path(f)) catch { case _: Exception => true })
-          if (vanished.nonEmpty) throw new GraftConcurrentWriteException(
-            s"graft rewrite conflict under $table: ${vanished.size} " +
-              s"candidate file(s) vanished mid-read (a concurrent " +
-              "rewrite committed) — re-plan against the new head and " +
-              "retry", e)
-          else throw e
       }
       GraftConflicts.withRewriteLock(table) {
       GraftConflicts.validateRewrite(table, read, candidates, serializable)
@@ -446,9 +465,8 @@ object GraftMaintenance {
     if (candidates.isEmpty)
       return GraftTableLog.latestVersion(table).getOrElse(0L)
     val partCols = GraftCatalog.effectivePartCols(table, df.schema)
-    val keep = readFilesWithDeletes(spark, df.schema, candidates,
-      GraftDeletes.livePositions(table),
-      GraftCatalog.readAliases(table, conf))
+    val keep = readCandidates(spark, table, df.schema, candidates,
+      GraftDeletes.livePositions(table))
       .filter(not(coalesce(condition, lit(false))))
     rewriteCommit(spark, table, candidates, keep, partCols, read)
   }
@@ -521,9 +539,8 @@ object GraftMaintenance {
     val partCols = GraftCatalog.effectivePartCols(table, df.schema)
     val hit = coalesce(condition, lit(false))
     import org.apache.spark.sql.functions.{assert_true, when}
-    val updated = readFilesWithDeletes(spark, df.schema, candidates,
-      GraftDeletes.livePositions(table),
-      GraftCatalog.readAliases(table, conf))
+    val updated = readCandidates(spark, table, df.schema, candidates,
+      GraftDeletes.livePositions(table))
       .select(fields.map { f =>
         resolved.get(f.name) match {
           case Some(v) =>
@@ -669,9 +686,8 @@ object GraftMaintenance {
         throw new IllegalStateException(
           s"graft merge: append committed but no log version under $table"))
     }
-    val candRows = readFilesWithDeletes(spark, df.schema, candidates,
-      GraftDeletes.livePositions(table),
-      GraftCatalog.readAliases(table, conf))
+    val candRows = readCandidates(spark, table, df.schema, candidates,
+      GraftDeletes.livePositions(table))
     val survivors = candRows.join(
       src.select(col(keyCol)).distinct(), Seq(keyCol), "left_anti")
       .select(df.schema.fieldNames.map(col).toSeq: _*)
@@ -699,8 +715,7 @@ object GraftMaintenance {
     val candidates = GraftParquetV2.listFiles(table)
       .filter(f => dv.contains(new Path(f).getName))
     val partCols = GraftCatalog.effectivePartCols(table, df.schema)
-    val clean = readFilesWithDeletes(spark, df.schema, candidates, dv,
-      GraftCatalog.readAliases(table, conf))
+    val clean = readCandidates(spark, table, df.schema, candidates, dv)
     rewriteCommit(spark, table, candidates, clean, partCols, read)
   }
 
@@ -762,8 +777,6 @@ object GraftMaintenance {
     val al = GraftCatalog.readAliases(table, conf)
     val a = readFilesWithDeletes(spark, schema, added, dvTo, al)
     val r = readFilesWithDeletes(spark, schema, removed, dvFrom, al)
-    import org.apache.spark.sql.functions.{abs, array_repeat, col, concat,
-      explode, lit, raise_error, sum, when}
     // The file sets are known DRIVER-SIDE, so the one-sided spans skip
     // the multiset diff entirely (r16 optimization round): a span that
     // only ADDED files (pure appends — every ingest commit, and the
@@ -773,35 +786,7 @@ object GraftMaintenance {
     // rows across the span and common rows must cancel.
     if (removed.isEmpty) a.withColumn("_change_type", lit("insert"))
     else if (added.isEmpty) r.withColumn("_change_type", lit("delete"))
-    else {
-      // Two-sided span: strategy picked by MEASURED row width AND span
-      // volume (r17, guide §8 "shuffle keys instead of payloads").
-      // WIDE rows over a LARGE span take the fingerprint-first diff —
-      // shuffle a 128-bit fingerprint per row instead of the full row
-      // image, aggregate signed counts over fingerprints, re-attach
-      // the few surviving payloads by a broadcast join — while narrow
-      // rows or small spans keep the single-pass signed-count
-      // aggregation. BOTH terms are load-bearing (measured,
-      // OPTIMIZATION_r17.md): for a ~30-byte orders row the
-      // fingerprint IS the row width, and below ~100 MB of span the
-      // payload shuffle is cheaper than the fingerprint path's second
-      // scan + survivor job — the extra machinery only pays where the
-      // image exchange dominates. The gate reads file sizes plus a
-      // bounded footer sample driver-side (span files only, ≤8 per
-      // side) — data-derived, not tuned to any host.
-      val minRowBytes = sys.props.get("graft.cdc.fingerprintMinRowBytes")
-        .map(_.toLong).getOrElse(192L)
-      val minSpanBytes = sys.props.get("graft.cdc.fingerprintMinSpanBytes")
-        .map(_.toLong).getOrElse(256L << 20)
-      // a prop set to ≤ 0 disables that term (spec/dry-run hook)
-      val wideRows = minRowBytes <= 0L ||
-        sampledRowBytes(added) >= minRowBytes ||
-        sampledRowBytes(removed) >= minRowBytes
-      val bigSpan = minSpanBytes <= 0L ||
-        totalBytes(added) + totalBytes(removed) >= minSpanBytes
-      (if (wideRows && bigSpan) fingerprintDiff(a, r) else None)
-        .getOrElse(signedCountDiff(a, r))
-    }
+    else signedCountDiff(a, r)
   }
 
   /** ONE signed-count aggregation yields BOTH diff directions (r16
@@ -826,66 +811,6 @@ object GraftMaintenance {
       .agg(sum(col(sign)).as(n))
       .filter(col(n) =!= 0L)
     replicateImages(counted, n, outCols)
-  }
-
-  /** FINGERPRINT-FIRST two-sided diff (r17, guide §8): both sides are
-    * scanned computing a 128-bit row fingerprint; signed counts
-    * aggregate over (fp1, fp2) — the ONLY corpus-sized shuffle moves
-    * 24 bytes/row — and the surviving fingerprints (the actually-
-    * changed row classes, tiny next to a mostly-carried rewrite span)
-    * broadcast back onto a second scan of each side to re-attach
-    * payloads. Net: full row images never shuffle at all; each side is
-    * scanned twice (sequential read — cheap next to a payload
-    * exchange at scale).
-    *
-    * Exactness: the fingerprint interleaves each column with its
-    * `isnull` indicator — Spark's hash expressions SKIP null fields
-    * (the seed rides through), so (null, x) / (x, null) would
-    * otherwise collide DETERMINISTICALLY; with the indicators pinning
-    * every value to its column, only the ~2⁻¹²⁸ random collision
-    * remains (two independently-seeded xxhash64). Hash equality
-    * matches the group-by key equality the exact path uses (NaN
-    * canonicalized, −0.0 ≡ 0.0 in Spark's hash expressions).
-    *
-    * Returns None — caller falls back to [[signedCountDiff]] — when
-    * the survivor set exceeds `graft.cdc.fingerprintMaxSurvivors`
-    * (default 2M rows, the graph trio's measured broadcast cap): a
-    * span where most rows changed is close to a full rewrite, where
-    * the single-pass payload aggregation is the right plan anyway. */
-  private def fingerprintDiff(a: DataFrame, r: DataFrame)
-      : Option[DataFrame] = {
-    import org.apache.spark.sql.functions.{broadcast, isnull, sum, xxhash64}
-    val maxSurvivors = sys.props.get("graft.cdc.fingerprintMaxSurvivors")
-      .map(_.toLong).getOrElse(2000000L)
-    val outCols = a.columns.toSeq
-    val f1 = "__graft_cf_fp1"; val f2 = "__graft_cf_fp2"
-    val sign = "__graft_cf_sign"; val n = "__graft_cf_n"
-    val fields = outCols.flatMap(c => Seq(col(c), isnull(col(c))))
-    def fp(df: DataFrame): DataFrame = df
-      .withColumn(f1, xxhash64(fields: _*))
-      .withColumn(f2, xxhash64((lit(0x9E3779B97F4A7C15L) +: fields): _*))
-    val fa = fp(a); val fr = fp(r)
-    // eager local checkpoint: materialized ONCE (the survivor count
-    // below is its action), reused by both broadcast sides of the
-    // re-attach; blocks are reclaimed by the ContextCleaner when the
-    // returned plan is GC'd — no CacheManager entry leaks per feed
-    // (the containmentPairs persistence discipline)
-    val counted = fa.select(col(f1), col(f2)).withColumn(sign, lit(1L))
-      .unionByName(fr.select(col(f1), col(f2)).withColumn(sign, lit(-1L)))
-      .groupBy(col(f1), col(f2)).agg(sum(col(sign)).as(n))
-      .filter(col(n) =!= 0L)
-      .localCheckpoint()
-    if (counted.count() > maxSurvivors) return None
-    // one payload row per surviving fingerprint (all byte-identical by
-    // the 128-bit argument): the broadcast join prunes non-survivors
-    // AT THE SCAN, so the dropDuplicates exchange carries survivors
-    // only, and replicateImages emits each image's |n| copies
-    def attach(side: DataFrame, cond: Column): DataFrame = side
-      .join(broadcast(counted.filter(cond)), Seq(f1, f2))
-      .dropDuplicates(f1, f2)
-    Some(replicateImages(
-      attach(fa, col(n) > 0L).unionByName(attach(fr, col(n) < 0L)),
-      n, outCols))
   }
 
   /** |n| copies per surviving image, tagged insert (n > 0) / delete
@@ -920,44 +845,6 @@ object GraftMaintenance {
               "byte-identical copies of one row")))
             .cast("int")))))
       .select((outCols :+ "_change_type").map(col): _*)
-  }
-
-  /** Total on-disk bytes of `files` — the span-volume gate term for
-    * [[fingerprintDiff]]. Unstattable files count 0 (advisory). */
-  private def totalBytes(files: Seq[String]): Long = {
-    val hconf = conf
-    files.map { f =>
-      try {
-        val p = new Path(f)
-        p.getFileSystem(hconf).getFileStatus(p).getLen
-      } catch { case _: Exception => 0L }
-    }.sum
-  }
-
-  /** Parquet-compressed bytes/row over a bounded, deterministic sample
-    * of `files` (≤8, name-sorted) — the driver-side width gate for
-    * [[fingerprintDiff]]. Footer reads cost ~ms each and the span is
-    * by definition the changed files; unreadable files are skipped
-    * (the gate is advisory — a wrong answer picks the slower exact
-    * plan, never a wrong result). 0 when unknowable. */
-  private def sampledRowBytes(files: Seq[String]): Double = {
-    import scala.jdk.CollectionConverters._
-    if (files.isEmpty) return 0.0
-    val hconf = conf
-    var bytes = 0L; var rows = 0L
-    files.sorted.take(8).foreach { f =>
-      try {
-        val p = new Path(f)
-        val len = p.getFileSystem(hconf).getFileStatus(p).getLen
-        val in = org.apache.parquet.hadoop.ParquetFileReader.open(
-          org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(p, hconf))
-        val nRows =
-          try in.getFooter.getBlocks.asScala.map(_.getRowCount).sum
-          finally in.close()
-        bytes += len; rows += nRows
-      } catch { case _: Exception => () }
-    }
-    if (rows <= 0L) 0.0 else bytes.toDouble / rows
   }
 
   /** ROLLBACK: restore the live table to the exact state of committed
@@ -1322,9 +1209,8 @@ object GraftMaintenance {
       (tailBytes + targetFileBytes - 1) / targetFileBytes)
       .min(Int.MaxValue).toInt
     import org.apache.spark.sql.functions.col
-    val sorted = readFilesWithDeletes(spark, df.schema, tail,
-      GraftDeletes.livePositions(table),
-      GraftCatalog.readAliases(table, conf))
+    val sorted = readCandidates(spark, table, df.schema, tail,
+      GraftDeletes.livePositions(table))
       .repartitionByRange(n, cols.map(col): _*)
       .sortWithinPartitions(cols.map(col): _*)
     val v = rewriteCommit(spark, table, tail, sorted, partCols, read)

@@ -347,4 +347,24 @@ class GraftCatalogSpec extends SparkSpec {
     assert(spark.sql(s"SELECT * FROM $cat.corp.fresh").count() == 0L)
     spark.sql(s"DROP TABLE $cat.corp.fresh")
   }
+
+  test("the main artifact's entry points are exactly Verify, Bench and the CLI") {
+    // dev probes and race tools live under src/test; the main artifact
+    // ships only the engine and these three entry points
+    val root = java.nio.file.Paths.get("src", "main", "scala")
+    assert(java.nio.file.Files.isDirectory(root),
+      s"main sources not found under ${root.toAbsolutePath}")
+    val walk = java.nio.file.Files.walk(root)
+    val mains = try {
+      import scala.jdk.CollectionConverters._
+      walk.iterator.asScala
+        .filter(_.toString.endsWith(".scala"))
+        .filter(f => new String(java.nio.file.Files.readAllBytes(f),
+          "UTF-8").contains("def main("))
+        .map(f => root.relativize(f).toString)
+        .toSet
+    } finally walk.close()
+    assert(mains ==
+      Set("graft/Verify.scala", "graft/Bench.scala", "graft/cli/Main.scala"))
+  }
 }

@@ -460,41 +460,36 @@ class GraftTableLogSpec extends SparkSpec {
     assert(feed.filter(col("_change_type") === "delete").count() == 1)
   }
 
-  test("fingerprint-first rewrite-span CDC is multiset-identical to the exact diff") {
-    // r17 (guide §8): wide rows diff by 128-bit fingerprint + payload
-    // re-attach instead of shuffling full row images. Same span, three
-    // strategies — narrow exact (default at this width), fingerprint
-    // (gate forced on), and fingerprint-overflow fallback (survivor cap
-    // 0) — must produce the SAME multiset, including duplicate images.
-    val dir = tmp("cdc_fp")
+  test("rewrite-span CDC with duplicate images matches exceptAll both ways") {
+    // A two-sided span (v3's append plus v4's DELETE rewrite) whose
+    // duplicate row images ride through with multiplicity > 1: the
+    // feed must equal an independent reference built from the two
+    // full version reads, exceptAll both ways (duplicates preserved).
+    val dir = tmp("cdc_dup")
     slice(0).coalesce(1).write.format(fmt).option("path", dir)
       .mode("append").save()                                        // v1
     slice(1).coalesce(1).write.format(fmt).option("path", dir)
       .mode("append").save()                                        // v2
-    // duplicate identical rows so multiplicity > 1 rides the span too
-    docs.filter(pmod(col("doc_id"), lit(4)) === 2).limit(5)
-      .union(docs.filter(pmod(col("doc_id"), lit(4)) === 2).limit(5))
-      .coalesce(1).write.format(fmt).option("path", dir)
+    // the top ids survive v4's DELETE, so their doubled images are
+    // inserts of multiplicity 2 in the feed
+    val top = docs.filter(pmod(col("doc_id"), lit(4)) === 2)
+      .orderBy(desc("doc_id")).limit(5)
+    top.union(top).coalesce(1).write.format(fmt).option("path", dir)
       .mode("append").save()                                        // v3
     val cut = ids(read(dir)).apply(ids(read(dir)).size / 2)
     GraftMaintenance.delete(spark, dir, col("doc_id") < cut)        // v4
-    def image(df: org.apache.spark.sql.DataFrame): Seq[String] =
+    def image(df: DataFrame): Seq[String] =
       df.collect().map(_.toString).sorted.toSeq
-    val exact = image(GraftMaintenance.changeFeedRows(spark, dir, 2, 4))
-    sys.props("graft.cdc.fingerprintMinRowBytes") = "0" // force both
-    sys.props("graft.cdc.fingerprintMinSpanBytes") = "0" // gate terms on
-    try {
-      val fp = image(GraftMaintenance.changeFeedRows(spark, dir, 2, 4))
-      assert(fp == exact, "fingerprint diff drifted from the exact diff")
-      sys.props("graft.cdc.fingerprintMaxSurvivors") = "0"
-      try {
-        val fb = image(GraftMaintenance.changeFeedRows(spark, dir, 2, 4))
-        assert(fb == exact, "survivor-cap fallback drifted")
-      } finally sys.props.remove("graft.cdc.fingerprintMaxSurvivors")
-    } finally {
-      sys.props.remove("graft.cdc.fingerprintMinRowBytes")
-      sys.props.remove("graft.cdc.fingerprintMinSpanBytes")
-    }
+    val feed = GraftMaintenance.changeFeedRows(spark, dir, 2, 4)
+    val v2 = read(dir, "versionAsOf" -> "2")
+    val v4 = read(dir, "versionAsOf" -> "4").select(v2.columns.map(col): _*)
+    val reference = v4.exceptAll(v2).withColumn("_change_type", lit("insert"))
+      .unionByName(v2.exceptAll(v4).withColumn("_change_type", lit("delete")))
+    val got = image(feed.select(reference.columns.map(col): _*))
+    assert(got.exists(_.endsWith(",delete]")), "span must be two-sided")
+    assert(got.filter(_.endsWith(",insert]")).groupBy(identity)
+      .values.map(_.size).toSet == Set(2), "duplicate images must survive")
+    assert(got == image(reference))
   }
 
   test("time-based vacuum retention; a pre-vacuum pinned read fails loudly") {

@@ -101,7 +101,7 @@ class GraphsSpec extends SparkSpec {
         Graphs.pageRank(g(edges: _*), "s", "t", iters).queryExecution
           .toRdd.count()
         // listener bus is async (drain API is private[spark]) — give
-        // queued events time to land, same as ScaleDryRun
+        // queued events time to land
         Thread.sleep(2000)
         counter.get()
       } finally spark.sparkContext.removeSparkListener(listener)

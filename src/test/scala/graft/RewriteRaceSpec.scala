@@ -24,4 +24,20 @@ class RewriteRaceSpec extends SparkSpec {
     val line = RewriteRaceDryRun.race(spark, 4, "compact")
     assert(line.startsWith("RACE ok=true"), line)
   }
+
+  test("a candidate archived between planning and read is a retryable conflict") {
+    // the in-process form of the compact-vs-merge window: the rewrite
+    // planned `files`, then a concurrent compaction archived one
+    val dir = java.nio.file.Files.createTempDirectory("graft_vanish")
+      .resolve("t").toString
+    val fmt = "graft.sources.GraftParquetTableProvider"
+    spark.range(10).toDF("key").coalesce(1).write.format(fmt)
+      .option("path", dir).mode("append").save()
+    val schema = spark.read.format(fmt).option("path", dir).load().schema
+    val files = graft.sources.GraftParquetV2.listFiles(dir)
+    assert(new java.io.File(new java.net.URI(files.head)).delete())
+    intercept[graft.sources.GraftConcurrentWriteException](
+      graft.sources.GraftMaintenance.readCandidates(spark, dir, schema,
+        files, Map.empty))
+  }
 }

@@ -13,8 +13,9 @@ import graft.operators.Dedup
   * The large-star/small-star contraction must stay logarithmic-round
   * and keep per-round state edge-shaped (no per-label row
   * materialization), whatever fraction of the corpus one cluster
-  * swallows. [[SkewClusterDryRun]] carries the 10×/100× walls for
-  * SCALE.md; this spec pins the shape at test scale.
+  * swallows. SCALE.md ("Round-13 addendum: half-corpus duplicate
+  * cluster") records the 10× walls; this spec pins the shape at test
+  * scale.
   */
 class SkewClusterSpec extends SparkSpec {
 

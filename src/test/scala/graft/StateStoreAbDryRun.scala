@@ -6,7 +6,8 @@ import org.apache.spark.sql.SparkSession
   * `RocksDBStateStoreProvider` vs the default
   * `HDFSBackedStateStoreProvider`. The round-15 state-partition lever
   * (size partitions to state volume, not CPU count —
-  * [[JoinDrainDryRun]], `StreamingQueries.withStatePartitions`) was
+  * SCALE.md "Round-15: q_stream_join_error_purchase attribution",
+  * `StreamingQueries.withStatePartitions`) was
   * derived entirely on the HDFS-backed store, whose cost model is
   * per-instance snapshot/delta maintenance × partitions × batches ×
   * stores-per-operator. A 100 TB deployment runs RocksDB, where the
