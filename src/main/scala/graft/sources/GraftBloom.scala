@@ -366,12 +366,9 @@ object GraftBloom {
     * reaps, never a wrong skip. */
   def buildForStaged(taskConf: Configuration, staged: Path,
       table: String, cols: Seq[String], fpp: Double): Seq[Path] = {
-    import org.apache.parquet.hadoop.ParquetFileReader
-    import org.apache.parquet.hadoop.util.HadoopInputFile
     import org.apache.parquet.schema.{LogicalTypeAnnotation, MessageType,
       PrimitiveType}
-    val in = ParquetFileReader.open(
-      HadoopInputFile.fromPath(staged, taskConf))
+    val in = GraftParquetIO.open(staged, taskConf)
     try {
       val fileSchema = in.getFooter.getFileMetaData.getSchema
       def primName(c: String) = fileSchema

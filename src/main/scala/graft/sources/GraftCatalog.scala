@@ -1067,14 +1067,8 @@ object GraftCatalog {
       conf: org.apache.hadoop.conf.Configuration): Unit = {
     val writeId = java.util.UUID.randomUUID().toString
     val carrier = new Path(p, f"part-00000-0-$writeId-schema.parquet")
-    val w = org.apache.parquet.hadoop.example.ExampleParquetWriter
-      .builder(org.apache.parquet.hadoop.util.HadoopOutputFile
-        .fromPath(carrier, conf))
-      .withType(GraftParquetWrite.messageType(schema))
-      .withCompressionCodec(
-        org.apache.parquet.hadoop.metadata.CompressionCodecName.SNAPPY)
-      .build()
-    w.close() // zero rows: the footer schema is the payload
+    GraftParquetIO.writer(carrier, GraftParquetWrite.messageType(schema),
+      conf).close() // zero rows: the footer schema is the payload
     GraftParquetWrite.commitMetadata(p,
       GraftParquetWrite.rawManifestEntries(p), writeId,
       dvMaybeStale = false) // a carrier adds one empty file

@@ -140,14 +140,8 @@ object GraftConflicts {
       // release ONLY our own lock: if it aged out mid-body and a
       // breaker re-claimed, deleting would unlock the new holder
       val mine =
-        try {
-          val in = fs.open(p)
-          try {
-            val buf = new Array[Byte](64)
-            val n = in.read(buf)
-            n > 0 && new String(buf, 0, n, "UTF-8") == token
-          } finally in.close()
-        } catch { case _: Exception => false }
+        try GraftFsContract.readBody(fs, p) == token
+        catch { case _: Exception => false }
       if (mine) {
         try fs.delete(p, false) catch { case _: Exception => () }
       }

@@ -3,9 +3,6 @@ package graft.sources
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.parquet.example.data.simple.SimpleGroupFactory
-import org.apache.parquet.hadoop.example.ExampleParquetWriter
-import org.apache.parquet.hadoop.metadata.CompressionCodecName
-import org.apache.parquet.hadoop.util.HadoopOutputFile
 import org.apache.spark.sql.types._
 
 /** POSITIONAL DELETE SIDECARS — the merge-on-read half of the table
@@ -139,12 +136,7 @@ object GraftDeletes {
       : (org.apache.parquet.hadoop.ParquetWriter[
           org.apache.parquet.example.data.Group], SimpleGroupFactory) = {
     val mt = GraftParquetWrite.messageType(dvSchema)
-    val w = ExampleParquetWriter
-      .builder(HadoopOutputFile.fromPath(out, hadoopConf))
-      .withType(mt)
-      .withCompressionCodec(CompressionCodecName.SNAPPY)
-      .build()
-    (w, new SimpleGroupFactory(mt))
+    (GraftParquetIO.writer(out, mt, hadoopConf), new SimpleGroupFactory(mt))
   }
 
   /** Write one DV parquet at `out` from (basename, pos) rows. The rows

@@ -108,4 +108,27 @@ object GraftFsContract {
       java.nio.file.Files.createFile(local) // O_EXCL — throws on loss
       fs.create(p, true) // overwrite the zero-byte file we own
     } else fs.create(p, false)
+
+  /** A small metadata file's whole body (ref, MV state, lock token),
+    * UTF-8 and trimmed. */
+  def readBody(fs: org.apache.hadoop.fs.FileSystem,
+      p: org.apache.hadoop.fs.Path): String = {
+    val in = fs.open(p)
+    try readToEnd(in) finally in.close()
+  }
+
+  /** `in` to EOF, UTF-8 and trimmed. `InputStream.read` may legally
+    * return fewer bytes than available (non-local filesystems), and a
+    * single read can cut a body into a different VALID one (`57\n112`
+    * read as `57\n11`) — loop to EOF. */
+  def readToEnd(in: java.io.InputStream): String = {
+    val out = new java.io.ByteArrayOutputStream(128)
+    val buf = new Array[Byte](256)
+    var n = in.read(buf)
+    while (n >= 0) {
+      out.write(buf, 0, n)
+      n = in.read(buf)
+    }
+    new String(out.toByteArray, "UTF-8").trim
+  }
 }

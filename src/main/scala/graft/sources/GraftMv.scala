@@ -165,14 +165,8 @@ object GraftMv {
       catch { case _: java.io.FileNotFoundException => Nil }
     seqs.iterator.flatMap { seq =>
       val body =
-        try {
-          val in = fs.open(statePath(mv, seq))
-          try {
-            val buf = new Array[Byte](128)
-            val n = in.read(buf)
-            if (n > 0) Some(new String(buf, 0, n, "UTF-8")) else None
-          } finally in.close()
-        } catch { case _: java.io.IOException => None }
+        try Some(GraftFsContract.readBody(fs, statePath(mv, seq)))
+        catch { case _: java.io.IOException => None }
       body.map(_.split('\n')).collect {
         case Array(s, m) if s.forall(_.isDigit) && m.forall(_.isDigit) =>
           (seq, s.toLong, m.toLong)

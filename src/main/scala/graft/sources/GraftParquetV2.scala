@@ -7,8 +7,6 @@ import scala.jdk.CollectionConverters._
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.parquet.example.data.Group
-import org.apache.parquet.hadoop.ParquetFileReader
-import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.parquet.schema.{LogicalTypeAnnotation, MessageType, PrimitiveType}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
@@ -1573,8 +1571,7 @@ class GraftAggPartitionReader(file: String, specs: Seq[GraftAggSpec],
   private var result: InternalRow = _
 
   private def computeFromFooter(): Option[Array[Any]] = {
-    val in = ParquetFileReader.open(
-      HadoopInputFile.fromPath(new Path(file), hadoopConf))
+    val in = GraftParquetIO.open(new Path(file), hadoopConf)
     try {
       val blocks = in.getFooter.getBlocks.asScala.toSeq
       val rowCount = blocks.map(_.getRowCount).sum
@@ -1714,8 +1711,7 @@ class GraftPartitionReader(file: String, required: StructType,
     extends PartitionReader[InternalRow] {
   private var emitted = 0L
   private val conf = hadoopConf
-  private val in = ParquetFileReader.open(
-    HadoopInputFile.fromPath(new Path(file), conf))
+  private val in = GraftParquetIO.open(new Path(file), conf)
   private val fileSchema = in.getFooter.getFileMetaData.getSchema
 
   /** RENAME COLUMN resolution: the requested (logical) name → the
@@ -2206,8 +2202,8 @@ object GraftParquetV2 {
       // KeyGroupedPartitioning/ordering claims for the JVM lifetime) —
       // answer false for THIS planning pass, loudly, and re-probe next
       try {
-        val in = ParquetFileReader.open(HadoopInputFile.fromPath(
-          new Path(file), GraftParquetWrite.sessionConf()))
+        val in = GraftParquetIO.open(
+          new Path(file), GraftParquetWrite.sessionConf())
         val zero = try in.getRecordCount == 0L finally in.close()
         zeroRowCache.put(file, java.lang.Boolean.valueOf(zero))
         zero
@@ -2351,8 +2347,7 @@ object GraftParquetV2 {
   def footerSchema(file: String,
       hadoopConf: Configuration = GraftParquetWrite.sessionConf())
       : MessageType = {
-    val in = ParquetFileReader.open(
-      HadoopInputFile.fromPath(new Path(file), hadoopConf))
+    val in = GraftParquetIO.open(new Path(file), hadoopConf)
     try in.getFooter.getFileMetaData.getSchema finally in.close()
   }
 

@@ -9,9 +9,6 @@ import org.apache.hadoop.fs.Path
 import org.apache.parquet.example.data.Group
 import org.apache.parquet.example.data.simple.SimpleGroupFactory
 import org.apache.parquet.hadoop.ParquetWriter
-import org.apache.parquet.hadoop.example.ExampleParquetWriter
-import org.apache.parquet.hadoop.metadata.CompressionCodecName
-import org.apache.parquet.hadoop.util.HadoopOutputFile
 import org.apache.parquet.io.api.Binary
 import org.apache.parquet.schema.{LogicalTypeAnnotation, MessageType, Types}
 import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
@@ -542,12 +539,8 @@ class GraftDataWriter(path: String, schema: StructType, writeId: String,
       val fileName = f"part-$partitionId%05d-$taskId-$writeId-" +
         f"${writers.size}%04d.parquet"
       val rel = if (relDir.isEmpty) fileName else s"$relDir/$fileName"
-      val w = ExampleParquetWriter
-        .builder(HadoopOutputFile.fromPath(
-          new Path(staging, rel), taskConf))
-        .withType(messageType)
-        .withCompressionCodec(CompressionCodecName.SNAPPY)
-        .build()
+      val w = GraftParquetIO.writer(
+        new Path(staging, rel), messageType, taskConf)
       (w, rel)
     })._1
   }
@@ -621,14 +614,13 @@ object GraftParquetWrite {
     * sources. Executor-side code receives the shipped [[GraftSerConf]]
     * instead — the task context carries no active session.
     *
-    * Writer-construction safety: `ExampleParquetWriter.build()` calls
-    * `GroupWriteSupport.setSchema(conf)`, but on parquet 1.16 that conf
-    * is the builder's OWN fresh `HadoopParquetConfiguration` (allocated
-    * in `ParquetWriter.Builder.build()` when `withConf` is unset; the
-    * conf inside `HadoopOutputFile` is used for filesystem access only)
-    * — so metadata-writer construction never writes through to this
-    * shared instance. Pinned by [[graft.SessionConfIsolationSpec]]
-    * against parquet upgrades. */
+    * Writer-construction safety: a parquet write support may store its
+    * state into the conf its writer is built on
+    * (`GroupWriteSupport.setSchema(conf)`). [[GraftParquetIO.writer]]
+    * builds every writer on a private COPY of this conf, so
+    * metadata-writer construction never writes through to this shared
+    * instance; readers ([[GraftParquetIO.open]]) only read it. Pinned
+    * by [[graft.SessionConfIsolationSpec]]. */
   private val sessionConfCache = new java.util.WeakHashMap[
     org.apache.spark.sql.SparkSession, Configuration]()
 
@@ -758,11 +750,8 @@ object GraftParquetWrite {
   def fileStatsEntries(file: String,
       hadoopConf: Configuration = sessionConf())
       : Seq[GraftManifestEntry] = {
-    import org.apache.parquet.hadoop.ParquetFileReader
-    import org.apache.parquet.hadoop.util.HadoopInputFile
     import org.apache.spark.unsafe.types.UTF8String
-    val in = ParquetFileReader.open(
-      HadoopInputFile.fromPath(new Path(file), hadoopConf))
+    val in = GraftParquetIO.open(new Path(file), hadoopConf)
     try {
       val blocks = in.getFooter.getBlocks.asScala.toSeq
       val fileSchema = in.getFooter.getFileMetaData.getSchema
@@ -866,16 +855,14 @@ object GraftParquetWrite {
         // readable by nobody. A FRESH torn head (a live cross-JVM
         // writer mid-write, or a crash inside the heal horizon) is
         // left alone and simply claimed PAST — commits never block on
-        // it; the number heals once aged
-        GraftTableLog.latestVersion(path)
-          .foreach(GraftTableLog.healTornSnapshot(path, _))
+        // it; the number heals once aged.
         // list-then-recheck: the listing must not be STALER than the
         // version number we claim, or a cross-JVM writer that renamed
         // its files and claimed a version while we listed would leave
         // our later-numbered snapshot MISSING its files (a version
         // whose history went backwards). If the head moved while we
         // listed, re-list.
-        val v0 = GraftTableLog.latestVersion(path).getOrElse(0L)
+        val v0 = headAfterHeal(path)
         // a table whose head is EMPTY (truncate, or a zero-row first
         // write) may have no data directory entries at all — an empty
         // snapshot is a legitimate version
@@ -915,6 +902,18 @@ object GraftParquetWrite {
     replaceManifest(path, entries, writeId)
   }
 
+  /** The log head a commit claims past, after healing an aged-torn
+    * head. One version listing serves both; the log is re-listed only
+    * when the heal removed (or lost to a vanish) the listed head. A
+    * head that moves after this listing is caught by the caller's
+    * recheck or by the exclusive claim itself. */
+  private def headAfterHeal(path: String): Long = {
+    val listed = GraftTableLog.latestVersion(path)
+    (if (listed.exists(GraftTableLog.healTornSnapshot(path, _)))
+      GraftTableLog.latestVersion(path)
+    else listed).getOrElse(0L)
+  }
+
   /** Commit a BRANCH append: claim the next GLOBAL version with a
     * snapshot = the branch head's file set + `newRels`, then re-point
     * the branch ref. The main lineage is untouched — main commits list
@@ -942,9 +941,7 @@ object GraftParquetWrite {
         // claim a global version for head's file set + ours
         var v = -1L
         while (v < 0) {
-          GraftTableLog.latestVersion(path)
-            .foreach(GraftTableLog.healTornSnapshot(path, _))
-          val v0 = GraftTableLog.latestVersion(path).getOrElse(0L)
+          val v0 = headAfterHeal(path)
           try {
             GraftTableLog.writeSnapshot(path, v0 + 1L, writeId,
               headRels ++ newRels, headEntries ++ newEntries, headDvRels)
@@ -1123,12 +1120,8 @@ object GraftParquetWrite {
       s"${GraftParquetV2.StatsSidecar}.tmp-$writeId")
     val mt = messageType(GraftParquetV2.manifestSchema)
     val factory = new SimpleGroupFactory(mt)
-    val w = ExampleParquetWriter
-      .builder(HadoopOutputFile.fromPath(
-        new Path(tmp, "part-00000.parquet"), conf))
-      .withType(mt)
-      .withCompressionCodec(CompressionCodecName.SNAPPY)
-      .build()
+    val w = GraftParquetIO.writer(
+      new Path(tmp, "part-00000.parquet"), mt, conf)
     try entries.foreach { e =>
       val g = factory.newGroup()
       g.add(0, e.file); g.add(1, e.column); g.add(2, e.kind)

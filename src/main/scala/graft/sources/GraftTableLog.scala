@@ -3,9 +3,6 @@ package graft.sources
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.parquet.example.data.simple.SimpleGroupFactory
-import org.apache.parquet.hadoop.example.ExampleParquetWriter
-import org.apache.parquet.hadoop.metadata.CompressionCodecName
-import org.apache.parquet.hadoop.util.HadoopOutputFile
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -145,15 +142,10 @@ object GraftTableLog {
     // the claim — a collision throws before any byte is written and
     // propagates to the caller's retry loop
     val preClaimed = GraftFsContract.claimLocalExclusive(out, conf)
-    val w = ExampleParquetWriter
-      .builder(HadoopOutputFile.fromPath(out, conf))
-      .withType(mt)
-      .withWriteMode(
-        if (preClaimed)
-          org.apache.parquet.hadoop.ParquetFileWriter.Mode.OVERWRITE
-        else org.apache.parquet.hadoop.ParquetFileWriter.Mode.CREATE)
-      .withCompressionCodec(CompressionCodecName.SNAPPY)
-      .build()
+    val w = GraftParquetIO.writer(out, mt, conf,
+      if (preClaimed)
+        org.apache.parquet.hadoop.ParquetFileWriter.Mode.OVERWRITE
+      else org.apache.parquet.hadoop.ParquetFileWriter.Mode.CREATE)
     // once the claim SUCCEEDED, a mid-write failure (disk full, FS
     // hiccup) must not leave a torn file squatting on the number —
     // delete our own partial before rethrowing, so the caller's retry
@@ -203,9 +195,7 @@ object GraftTableLog {
     if (!fs.exists(p)) return true
     val readable =
       try {
-        val in = org.apache.parquet.hadoop.ParquetFileReader.open(
-          org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(p, conf))
-        in.close(); true
+        GraftParquetIO.open(p, conf).close(); true
       } catch { case _: Exception => false }
     if (readable) return false
     // unreadable — but only reclaim if it has been sitting a while: a
@@ -375,24 +365,6 @@ object GraftTableLog {
     p.getFileSystem(conf).delete(p, false)
   }
 
-  /** Read a ref file's whole body. InputStream.read may legally
-    * return fewer bytes than available (non-local filesystems), so a
-    * single read() can parse a TRUNCATED ref as corrupt — loop to EOF. */
-  private def readRefBody(fs: org.apache.hadoop.fs.FileSystem,
-      p: Path): String = {
-    val in = fs.open(p)
-    try {
-      val out = new java.io.ByteArrayOutputStream(128)
-      val buf = new Array[Byte](256)
-      var n = in.read(buf)
-      while (n >= 0) {
-        out.write(buf, 0, n)
-        n = in.read(buf)
-      }
-      new String(out.toByteArray, "UTF-8").trim
-    } finally in.close()
-  }
-
   /** All tags: name → version, name-sorted. */
   def tags(table: String): Seq[(String, Long)] = {
     val d = refsPath(table)
@@ -402,7 +374,7 @@ object GraftTableLog {
       .filter(_.getName.startsWith("tag."))
       .map { p =>
         val name = p.getName.stripPrefix("tag.")
-        val body = readRefBody(fs, p)
+        val body = GraftFsContract.readBody(fs, p)
         val v = try body.toLong catch {
           case _: NumberFormatException => throw new IllegalStateException(
             s"graft table log: tag file ${p.getName} of $table is " +
@@ -501,7 +473,7 @@ object GraftTableLog {
     // loudly instead of committing onto a lineage being dismantled
     def tombstoned(hb: (Long, Long)): Boolean = hb._1 < 0L
     def bodyOf(seq: Long): Option[String] =
-      try Some(readRefBody(fs, branchSeqPath(table, name, seq)))
+      try Some(GraftFsContract.readBody(fs, branchSeqPath(table, name, seq)))
       catch { case _: java.io.FileNotFoundException => None }
     var cand = branchSeqs(table, name)
     var fallbacks = 0

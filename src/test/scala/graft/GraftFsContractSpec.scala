@@ -34,4 +34,29 @@ class GraftFsContractSpec extends org.scalatest.funsuite.AnyFunSuite {
     try GraftFsContract.requireAtomicCommitFs("s3a://bucket/t")
     finally sys.props.remove(k)
   }
+
+  test("small-file bodies are read to EOF across short reads") {
+    // a legal InputStream that hands out ONE byte per read: a single
+    // read would see "5" of an MV state "57\n112", and stopping early
+    // anywhere can parse as a different valid state ("57\n11")
+    def trickle(body: String): java.io.InputStream =
+      new java.io.InputStream {
+        private val bytes = body.getBytes("UTF-8")
+        private var at = 0
+        override def read(): Int =
+          if (at >= bytes.length) -1
+          else { at += 1; bytes(at - 1) & 0xff }
+        override def read(b: Array[Byte], off: Int, len: Int): Int =
+          if (at >= bytes.length) -1
+          else if (len == 0) 0
+          else { b(off) = bytes(at); at += 1; 1 }
+      }
+    assert(GraftFsContract.readToEnd(trickle("57\n112")) == "57\n112")
+    val token = java.util.UUID.randomUUID().toString
+    assert(GraftFsContract.readToEnd(trickle(token + "\n")) == token)
+    assert(GraftFsContract.readToEnd(trickle("")) == "")
+    // a body longer than the internal buffer still arrives whole
+    val long = "x" * 1000
+    assert(GraftFsContract.readToEnd(trickle(long)) == long)
+  }
 }

@@ -4,22 +4,30 @@ import java.nio.file.Files
 
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
-import graft.sources.{GraftCatalog, GraftDeletes, GraftParquetWrite}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.unsafe.types.UTF8String
+import graft.sources.{GraftBloom, GraftCatalog, GraftCommitMessage,
+  GraftDataWriter, GraftDeletes, GraftParquetWrite, GraftSerConf}
 
 /** The cached per-session Hadoop conf ([[GraftParquetWrite.sessionConf]])
-  * is SHARED and must stay read-only. The one plausible mutator is
-  * parquet's `GroupWriteSupport.setSchema(conf)` during metadata-writer
-  * construction (snapshot/manifest/DV/schema-carrier writers all build
-  * `ExampleParquetWriter`s) — if it wrote through to the shared conf, two
-  * concurrent driver-side commits could interleave setSchema/init and
-  * persist metadata under the WRONG schema.
+  * is SHARED and must stay read-only; so must a task's shipped
+  * [[GraftSerConf]] value, which every file of the task shares. The
+  * plausible mutator is a parquet write support storing its state into
+  * the conf its writer is built on (`GroupWriteSupport.setSchema(conf)`,
+  * which earlier parquet releases' example writer called) during writer
+  * construction (snapshot/manifest/DV/schema-carrier and task data
+  * writers) — if that wrote through to a shared conf, two concurrent
+  * commits could interleave setSchema/init and persist metadata or data
+  * under the WRONG schema.
   *
-  * It does not write through: parquet 1.16's `ParquetWriter.Builder.build()`
-  * allocates its own fresh `HadoopParquetConfiguration` when `withConf` was
-  * never called (the conf inside `HadoopOutputFile` is used for filesystem
-  * access only), so `setSchema` lands on a builder-private conf. This spec
-  * pins that contract against parquet upgrades: exercise every driver-side
-  * metadata writer, then assert the shared conf carries no schema key.
+  * It cannot write through: [[graft.sources.GraftParquetIO.writer]]
+  * builds every writer on a private copy of the caller's conf, and every
+  * other parquet construction site is forbidden (the guard test below),
+  * so the copy cannot be bypassed. Readers
+  * ([[graft.sources.GraftParquetIO.open]]) build their read options from
+  * the shared conf without writing to it. This spec exercises every
+  * writer and a task-side footer read-back, then asserts neither conf
+  * carries a writer schema.
   */
 class SessionConfIsolationSpec extends SparkSpec {
 
@@ -70,5 +78,57 @@ class SessionConfIsolationSpec extends SparkSpec {
 
     // and the table written in step 1 still reads back coherently
     assert(spark.read.format(fmt).option("path", dir).load().count() == 50)
+  }
+
+  test("task data writer and write-time bloom build leave both confs unmutated") {
+    spark.sparkContext
+    val shared = GraftParquetWrite.sessionConf()
+    // the conf a task receives: the shipped copy, rebuilt on first use
+    val shipped = GraftSerConf.session()
+    val dir = tmp("task")
+    val schema = StructType(Seq(StructField("k", LongType),
+      StructField("v", StringType)))
+    val w = new GraftDataWriter(dir, schema, "confiso", 0, 0L,
+      bloomSpec = Some((Seq("k", "v"), 0.01)), serConf = shipped)
+    (1L to 20L).foreach(i =>
+      w.write(InternalRow(i, UTF8String.fromString(s"v$i"))))
+    val msg = w.commit().asInstanceOf[GraftCommitMessage]
+    w.close()
+    // the data writer built, the footer read-back produced manifest
+    // entries, and buildForStaged read the file back for both columns
+    assert(msg.files.size == 1)
+    assert(msg.stats.map(_.column).toSet == Set("k", "v"))
+    val sidecars = new java.io.File(dir, GraftBloom.BloomDir).listFiles()
+      .map(_.getName).filter(_.endsWith(".bloom"))
+    assert(sidecars.length == 2, sidecars.mkString(", "))
+
+    assert(shipped.value.get(SchemaKey) == null,
+      "the task's shipped conf was mutated by the data writer builder — " +
+        "every later file of the task would inherit its schema")
+    assert(shared.get(SchemaKey) == null,
+      "shared session conf was mutated by a task-side writer")
+  }
+
+  test("parquet readers and writers are built only through GraftParquetIO") {
+    // the direct entry points each allocate and parse a fresh Hadoop
+    // conf per call, and a writer built on a shared conf may store its
+    // state into it; GraftParquetIO is the one place that avoids both
+    val root = java.nio.file.Paths.get("src", "main", "scala")
+    assert(java.nio.file.Files.isDirectory(root),
+      s"main sources not found under ${root.toAbsolutePath}")
+    val walk = java.nio.file.Files.walk(root)
+    val sites = try {
+      import scala.jdk.CollectionConverters._
+      walk.iterator.asScala
+        .filter(_.toString.endsWith(".scala"))
+        .filter { f =>
+          val src = new String(java.nio.file.Files.readAllBytes(f), "UTF-8")
+          src.contains("ParquetFileReader.open(") ||
+            src.contains("ExampleParquetWriter")
+        }
+        .map(f => root.relativize(f).toString)
+        .toSet
+    } finally walk.close()
+    assert(sites == Set("graft/sources/GraftParquetIO.scala"))
   }
 }
