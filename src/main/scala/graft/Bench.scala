@@ -74,9 +74,8 @@ object Bench {
     spark.sparkContext.setLogLevel("WARN")
     // adopt BEFORE warming: events.parquet needs the nanosAsLong conf
     graft.core.GraftSession.adopt(spark)
-    for (t <- Seq("region", "nation", "customer", "supplier", "part",
-        "orders", "lineitem", "events", "documents", "embeddings"))
-      spark.read.parquet(s"$sfDir/$t.parquet").count()
+    for (t <- graft.core.Tables.names)
+      graft.core.Tables.table(spark, sfDir, t).count()
     // warm the codegen/JIT paths (agg, join, window) so the first measured
     // query doesn't absorb compiler start-up
     locally {

@@ -213,9 +213,8 @@ object Catalog {
     (spark, dir) => {
       val rides = Tables.rides(spark, dir)
       val counts = RideCounts.countPerPair(rides, "start_station_id", "end_station_id", "cnt")
-      val nSt = Tables.supplier(spark, dir).agg(count(lit(1)).as("n"))
       val st = Tables.stationsById(spark, dir)
-        .crossJoin(broadcast(nSt)).filter(col("id") < col("n") - 2).drop("n")
+        .filter(col("id") < Tables.stationCount(spark, dir) - 2)
       val dists = StationDistances.pairwiseWith(st, "id",
         (la1, lo1, la2, lo2) => round(haversine_km(la1, lo1, la2, lo2), 3))
       TotalDistance.totalKm(counts, dists, "start_station_id", "end_station_id", "cnt")

@@ -343,7 +343,7 @@ object RelationalQueries {
   val qDsv2StreamSource = QueryDef("q_dsv2_stream_source",
     (spark, dir) => {
       import spark.implicits._
-      val ev = spark.read.parquet(s"$dir/events.parquet")
+      val ev = Tables.events(spark, dir)
         .select(col("event_id"), col("user_id"), col("event_type"),
           col("value"))
       val run = java.util.UUID.randomUUID().toString

@@ -1,5 +1,6 @@
 package graft
 
+import graft.core.Tables
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
@@ -73,7 +74,7 @@ object StreamingQueries {
     * the epoch-marker check, whatever the window × key cardinality. */
   val qStreamTumbling = QueryDef("q_stream_tumbling_1h",
     (spark, dir) => {
-      val batchSchema = spark.read.parquet(s"$dir/events.parquet").schema
+      val batchSchema = Tables.events(spark, dir).schema
       val (cat, warehouse) =
         graft.streaming.TableDrain.ensureCatalog(spark)
       val run = java.util.UUID.randomUUID().toString.replace("-", "")
@@ -172,7 +173,7 @@ object StreamingQueries {
     * rows. */
   private[graft] def lateDrain(spark: org.apache.spark.sql.SparkSession,
       dir: String, delay: String): DataFrame = {
-      val ev = spark.read.parquet(s"$dir/events.parquet")
+      val ev = Tables.events(spark, dir)
       val run = java.util.UUID.randomUUID().toString
       val runId = run.replace("-", "")
       val (cat, warehouse) = graft.streaming.TableDrain.ensureCatalog(spark)
@@ -288,7 +289,7 @@ object StreamingQueries {
   val qStreamSessions = QueryDef("q_stream_sessions_2h",
     (spark, dir) => {
       import spark.implicits._
-      val ev = spark.read.parquet(s"$dir/events.parquet")
+      val ev = Tables.events(spark, dir)
       val run = java.util.UUID.randomUUID().toString
       val tmp = sys.props("java.io.tmpdir")
       val ingest = s"$tmp/graft_stream_sess_$run"
@@ -395,7 +396,7 @@ object StreamingQueries {
   val qStreamNearDup = QueryDef("q_stream_neardup_pairs",
     (spark, dir) => {
       import spark.implicits._
-      val batchSchema = spark.read.parquet(s"$dir/documents.parquet").schema
+      val batchSchema = Tables.documents(spark, dir).schema
       val ckpt = s"${sys.props("java.io.tmpdir")}/graft_stream_ckpt_" +
         java.util.UUID.randomUUID().toString
       val src = spark.readStream.schema(batchSchema)
@@ -462,7 +463,7 @@ object StreamingQueries {
     * aggregation doesn't need it). */
   val qStreamSink = QueryDef("q_stream_sink_roundtrip",
     (spark, dir) => {
-      val ev = spark.read.parquet(s"$dir/events.parquet")
+      val ev = Tables.events(spark, dir)
         .select(col("event_id"), col("user_id"), col("event_type"),
           col("value"))
       val run = java.util.UUID.randomUUID().toString
@@ -553,7 +554,7 @@ object StreamingQueries {
   val qStreamJoin = QueryDef("q_stream_join_error_purchase",
     (spark, dir) => {
       import spark.implicits._
-      val ev = spark.read.parquet(s"$dir/events.parquet")
+      val ev = Tables.events(spark, dir)
       val run = java.util.UUID.randomUUID().toString
       val tmp = sys.props("java.io.tmpdir")
       val ingest = s"$tmp/graft_stream_join_in_$run"
@@ -657,7 +658,7 @@ object StreamingQueries {
     * row drifts a count or a latitude and breaks the hash. */
   val qStreamEnrich = QueryDef("q_stream_enrich_stations",
     (spark, dir) => {
-      val batchSchema = spark.read.parquet(s"$dir/events.parquet").schema
+      val batchSchema = Tables.events(spark, dir).schema
       val (cat, warehouse) = graft.streaming.TableDrain.ensureCatalog(spark)
       val run = java.util.UUID.randomUUID().toString.replace("-", "")
       val tbl = s"t_enrich_$run"
@@ -727,7 +728,7 @@ object StreamingQueries {
   val qStreamPipe = QueryDef("q_dsv2_stream_pipe",
     (spark, dir) => {
       import spark.implicits._
-      val ev = spark.read.parquet(s"$dir/events.parquet")
+      val ev = Tables.events(spark, dir)
         .select(col("event_id"), col("user_id"), col("event_type"),
           col("value"))
       val run = java.util.UUID.randomUUID().toString
@@ -849,7 +850,7 @@ object StreamingQueries {
   val qStreamMoments = QueryDef("q_stream_moments",
     (spark, dir) => {
       import spark.implicits._
-      val ev = spark.read.parquet(s"$dir/events.parquet")
+      val ev = Tables.events(spark, dir)
         .select(col("event_id"), col("event_type"), col("value"))
       val run = java.util.UUID.randomUUID().toString
       val tmp = sys.props("java.io.tmpdir")
@@ -972,8 +973,7 @@ object StreamingQueries {
         iters = 8, lr = 4.0)
       graft.text.QualityClassifier.exportModel(
         spark, model, StreamQcWeightsPath)
-      val batchSchema = spark.read
-        .parquet(s"$dir/documents.parquet").schema
+      val batchSchema = Tables.documents(spark, dir).schema
       val (cat, warehouse) = graft.streaming.TableDrain.ensureCatalog(spark)
       val run = java.util.UUID.randomUUID().toString.replace("-", "")
       val tbl = s"t_qc_$run"
@@ -1022,7 +1022,7 @@ object StreamingQueries {
   val qStreamPartitionedSource = QueryDef("q_stream_partitioned_source",
     (spark, dir) => {
       val fmt = "graft.sources.GraftParquetTableProvider"
-      val orders = spark.read.parquet(s"$dir/orders.parquet")
+      val orders = Tables.orders(spark, dir)
         .select(col("o_orderkey"), col("o_custkey"), col("o_orderstatus"),
           col("o_totalprice"), col("o_orderpriority"))
         .filter(pmod(col("o_orderkey"), lit(4)) === 0)
@@ -1098,7 +1098,7 @@ object StreamingQueries {
       val ckpt = s"$tmp/graft_cdc_ckpt_$run"
       val conf = spark.sparkContext.hadoopConfiguration
       val fs = new org.apache.hadoop.fs.Path(path).getFileSystem(conf)
-      val orders = spark.read.parquet(s"$dir/orders.parquet")
+      val orders = Tables.orders(spark, dir)
         .select("o_orderkey", "o_orderstatus", "o_totalprice")
       def slice(k: Int) =
         orders.filter(pmod(col("o_orderkey"), lit(4)) === k)
@@ -1208,7 +1208,7 @@ object StreamingQueries {
     * a lost epoch drifts a count/sum and breaks the hash. */
   val qStreamExactDedup = QueryDef("q_stream_exact_dedup",
     (spark, dir) => {
-      val docs = spark.read.parquet(s"$dir/documents.parquet")
+      val docs = Tables.documents(spark, dir)
         .select(col("doc_id"), col("lang"), col("n_chars"), col("text"))
       val run = java.util.UUID.randomUUID().toString
       val tmp = sys.props("java.io.tmpdir")

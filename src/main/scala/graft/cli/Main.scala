@@ -120,7 +120,7 @@ object Main {
             // source: schema from a static read (file sources require it),
             // event-time from l_shipdate — monthly tumbling windows
             val path = s"$input/lineitem.parquet"
-            val schema = spark.read.parquet(path).schema
+            val schema = Tables.lineitem(spark, input).schema
             // the file stream source tails a DIRECTORY (new files become
             // new micro-batches); testdata ships single parquet files, so
             // stage one into a temp ingest dir — exactly the landing-zone
@@ -178,7 +178,7 @@ object Main {
         // same staging shape as stream-routes' file source
         val minEst = flags.getOrElse("min-est-jaccard", "0.8").toDouble
         val path = s"$input/documents.parquet"
-        val schema = spark.read.parquet(path).schema
+        val schema = Tables.documents(spark, input).schema
         val ingestDir = java.nio.file.Files.createTempDirectory("graft_neardup")
         java.nio.file.Files.copy(java.nio.file.Paths.get(path),
           ingestDir.resolve("documents-000.parquet"))

@@ -1,6 +1,14 @@
 package graft.core
 
+import scala.jdk.CollectionConverters._
+
+import graft.sources.{GraftParquetIO, GraftParquetWrite}
+import org.apache.hadoop.fs.Path
+import org.apache.parquet.hadoop.Footer
+import org.apache.parquet.hadoop.metadata.ParquetMetadata
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat,
+  ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.functions._
 
 /** Loaders for the driver-generated testdata tables (TESTDATA.md) plus the
@@ -21,10 +29,49 @@ import org.apache.spark.sql.functions._
   */
 object Tables {
 
-  /** Read one testdata table. Parquet → schema travels with the file and
-    * Catalyst pushes projections/filters into the scan. */
-  def table(spark: SparkSession, sfDir: String, name: String): DataFrame =
-    spark.read.parquet(s"$sfDir/$name.parquet")
+  /** The testdata corpus (TESTDATA.md): one parquet file per table. */
+  val names: Seq[String] = Seq("region", "nation", "customer", "supplier",
+    "part", "orders", "lineitem", "events", "documents", "embeddings")
+
+  /** Read one testdata table — the ONE loader for corpus files. A file's
+    * schema comes from its own footer, read on the driver (about 1 ms)
+    * and converted exactly as Spark's inference converts each footer
+    * (`readSchemaFromFooter` under the session's parquet flags, so
+    * `nanosAsLong` and the Spark row-metadata key still apply). A bare
+    * `spark.read.parquet` would launch a one-task schema-inference job
+    * per table on every query build. A directory of parts keeps Spark's
+    * own inference, because only there does Spark choose among files. */
+  def table(spark: SparkSession, sfDir: String, name: String): DataFrame = {
+    val path = s"$sfDir/$name.parquet"
+    footer(spark, path) match {
+      case Some(meta) => spark.read.schema(ParquetFileFormat.readSchemaFromFooter(
+        new Footer(new Path(path), meta),
+        new ParquetToSparkSchemaConverter(spark.sessionState.conf))).parquet(path)
+      case None => spark.read.parquet(path)
+    }
+  }
+
+  /** Number of stations (supplier rows): the footer's row-group counts,
+    * which sum to `count(*)` exactly, so no job runs for it. */
+  def stationCount(spark: SparkSession, sfDir: String): Long =
+    footer(spark, s"$sfDir/supplier.parquet") match {
+      case Some(meta) => meta.getBlocks.asScala.map(_.getRowCount).sum
+      case None => supplier(spark, sfDir).count()
+    }
+
+  /** The footer of `path` when it is a single file; None otherwise. */
+  private def footer(spark: SparkSession, path: String): Option[ParquetMetadata] = {
+    val p = new Path(path)
+    val conf = GraftParquetWrite.sessionConf(spark)
+    val isFile =
+      try p.getFileSystem(conf).getFileStatus(p).isFile
+      catch { case _: java.io.FileNotFoundException => false }
+    if (!isFile) None
+    else {
+      val reader = GraftParquetIO.open(p, conf)
+      try Some(reader.getFooter) finally reader.close()
+    }
+  }
 
   def lineitem(spark: SparkSession, sfDir: String): DataFrame = table(spark, sfDir, "lineitem")
   def orders(spark: SparkSession, sfDir: String): DataFrame = table(spark, sfDir, "orders")
@@ -94,14 +141,9 @@ object Tables {
   /** Rides analog: one row per lineitem, (start, end) station ids in
     * [0, stationCount). End derives from l_partkey so pairs repeat with a
     * skewed-but-covering distribution, like real ride data. */
-  def rides(spark: SparkSession, sfDir: String): DataFrame = {
-    val nStations = supplier(spark, sfDir)
-      .agg(count(lit(1)).as("n"))
-    lineitem(spark, sfDir)
-      .select(col("l_suppkey"), col("l_partkey"))
-      .crossJoin(broadcast(nStations))
-      .select(
-        col("l_suppkey").as("start_station_id"),
-        pmod(col("l_partkey"), col("n")).cast("long").as("end_station_id"))
-  }
+  def rides(spark: SparkSession, sfDir: String): DataFrame =
+    lineitem(spark, sfDir).select(
+      col("l_suppkey").as("start_station_id"),
+      pmod(col("l_partkey"), lit(stationCount(spark, sfDir)))
+        .cast("long").as("end_station_id"))
 }

@@ -627,15 +627,20 @@ object GraftParquetWrite {
   def sessionConf(): Configuration =
     org.apache.spark.sql.SparkSession.getActiveSession
       .orElse(org.apache.spark.sql.SparkSession.getDefaultSession) match {
-      case Some(s) => sessionConfCache.synchronized {
-        var c = sessionConfCache.get(s)
-        if (c == null) {
-          c = s.sessionState.newHadoopConf()
-          sessionConfCache.put(s, c)
-        }
-        c
-      }
+      case Some(s) => sessionConf(s)
       case None => new Configuration()
+    }
+
+  /** The cached driver-side Hadoop conf of `spark` itself, for callers
+    * that hold their session (no active-session lookup). */
+  def sessionConf(spark: org.apache.spark.sql.SparkSession): Configuration =
+    sessionConfCache.synchronized {
+      var c = sessionConfCache.get(spark)
+      if (c == null) {
+        c = spark.sessionState.newHadoopConf()
+        sessionConfCache.put(spark, c)
+      }
+      c
     }
 
   /** Loud plan-time validation of a partition-column list against the
