@@ -1070,8 +1070,7 @@ object GraftCatalog {
     GraftParquetIO.writer(carrier, GraftParquetWrite.messageType(schema),
       conf).close() // zero rows: the footer schema is the payload
     GraftParquetWrite.commitMetadata(p,
-      GraftParquetWrite.rawManifestEntries(p), writeId,
-      dvMaybeStale = false) // a carrier adds one empty file
+      GraftParquetWrite.rawManifestEntries(p), writeId)
   }
 
   /** Table-root sidecar holding the CREATE TABLE … PARTITIONED BY

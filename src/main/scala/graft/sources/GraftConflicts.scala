@@ -24,14 +24,28 @@ class GraftConcurrentWriteException(msg: String, cause: Throwable = null)
   * Appends have the optimistic version claim
   * ([[GraftParquetWrite.commitMetadata]]) and branch heads have CAS
   * ([[GraftTableLog.casBranchHead]]); this object covers the last
-  * writer class — commits that REMOVE files from the live set
-  * (UPDATE / DELETE / MERGE / compact / recluster / rewriteDeletes /
-  * MOR deletes racing them). Two cooperating pieces:
+  * writer class — commits that REMOVE files from the live set or add
+  * deletion vectors. Every one of them holds the lock (and, where it
+  * read the table, validates) around its [[GraftSwap]]:
+  *   - SQL `UPDATE` / `MERGE INTO` / non-metadata `DELETE` and every
+  *     `TableDrain` epoch (copy-on-write, [[GraftRowLevelWrite]]: read
+  *     captured when the operation is built, MERGE serializable);
+  *   - SQL merge-on-read commits ([[GraftDeltaWrite]]: no read state —
+  *     it checks instead that every data file its DVs reference is
+  *     still live);
+  *   - overwrites (compact validates its `conflictReadVersion`
+  *     serializably; a user overwrite replaces whatever is there);
+  *   - the DataFrame rewrites of [[GraftMaintenance]] (UPDATE / DELETE
+  *     / MERGE / compactSmallFiles / recluster / rewriteDeletes).
+  * Plain appends and streaming epochs take neither. Every swap undoes
+  * a failed grow, so a refusal or a failed rename leaves the table on
+  * its pre-commit generation. Two cooperating pieces:
   *
   * 1. '''The rewrite lock''' ([[withRewriteLock]]): one exclusive-
   *    create lock file per table serializes the PHYSICAL
   *    shrink-then-grow window (archive candidates → rename rewrites
-  *    in → metadata commit). Without it, two overlapping windows can
+  *    in → metadata commit). Not reentrant: callers take it, the swap
+  *    never does. Without it, two overlapping windows can
   *    interleave their listings: writer A lists while writer B is
   *    mid-shrink and commits a snapshot that is silently missing B's
   *    rows. The lock covers only the rename+commit window — the
@@ -39,7 +53,7 @@ class GraftConcurrentWriteException(msg: String, cause: Throwable = null)
   *    rewritten rows) runs before it, so disjoint rewrites overlap
   *    their compute and serialize only renames, which is what keeps
   *    the discipline viable on a 100 TB table. A crashed holder's
-  *    lock ages out ([[lockHorizonMs]], mtime-based — the torn-
+  *    lock ages out ([[LockHorizonMs]], mtime-based — the torn-
   *    snapshot heal discipline) and is broken by the next writer.
   *
   * 2. '''Read-snapshot validation''' ([[validateRewrite]]): under the
@@ -82,24 +96,20 @@ object GraftConflicts {
     * (retryable). Rewrite windows are rename-only, so seconds-scale
     * contention means a genuinely concurrent rewrite storm — refusing
     * beats queueing unboundedly. */
-  private def lockWaitMs: Long =
-    sys.props.get("graft.rewrite.lockWaitMs").map(_.toLong)
-      .getOrElse(60000L)
+  private val LockWaitMs = 60000L
 
   /** Age past which a lock is presumed a crashed holder's and broken.
     * The window it guards is O(renames + one metadata commit); 10 min
     * comfortably exceeds it even on a congested object store (same
     * rationale as `graft.log.healHorizonMs`). */
-  private def lockHorizonMs: Long =
-    sys.props.get("graft.rewrite.lockHorizonMs").map(_.toLong)
-      .getOrElse(600000L)
+  private val LockHorizonMs = 600000L
 
   /** Run `body` holding the table's cross-JVM rewrite lock. */
   def withRewriteLock[T](table: String)(body: => T): T = {
     val p = lockPath(table)
     val fs = p.getFileSystem(conf)
     val token = java.util.UUID.randomUUID().toString
-    val deadline = System.currentTimeMillis() + lockWaitMs
+    val deadline = System.currentTimeMillis() + LockWaitMs
     var held = false
     while (!held) {
       val out =
@@ -120,7 +130,7 @@ object GraftConflicts {
           }
           val aged = st.exists(s =>
             System.currentTimeMillis() - s.getModificationTime >
-              lockHorizonMs)
+              LockHorizonMs)
           if (aged) {
             // crashed holder: break and re-contend (two breakers race
             // the delete harmlessly — one create wins the re-claim)
@@ -128,7 +138,7 @@ object GraftConflicts {
           } else if (st.isDefined) {
             if (System.currentTimeMillis() > deadline)
               throw new GraftConcurrentWriteException(
-                s"graft rewrite: timed out after ${lockWaitMs} ms " +
+                s"graft rewrite: timed out after $LockWaitMs ms " +
                   s"waiting for the rewrite lock under $table — a " +
                   "concurrent rewrite/compaction holds it; retry the " +
                   "operation")

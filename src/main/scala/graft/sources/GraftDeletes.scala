@@ -38,7 +38,7 @@ import org.apache.spark.sql.types._
   *     overwrite) reads THROUGH the DVs, so the rewritten generation
   *     materializes them; a DV file whose every referenced basename has
   *     left the live set is then ARCHIVED at the next metadata commit
-  *     ([[archiveFullyStale]]) — still resolvable for older snapshots,
+  *     ([[fullyStale]]) — still resolvable for older snapshots,
   *     reclaimed by vacuum with everything else.
   *
   * Scale posture: DV volume ∝ deleted rows, loaded ONCE per scan
@@ -154,39 +154,39 @@ object GraftDeletes {
     n
   }
 
-  /** GC at metadata commit: ARCHIVE every live DV file whose every
-    * referenced basename has left the live data set (a COW rewrite,
-    * compaction, or overwrite replaced the files it pointed at — the
-    * rewrite read through the DV, so the deletes are materialized in
-    * the new generation). Archived, not deleted: older snapshots still
-    * reference the DV file, and [[resolveDvRels]] finds it in the
-    * archive until vacuum reclaims it. Staleness is monotone (an
-    * archived basename never returns to the live set — names are
-    * UUID-unique), so a concurrent committer reaching the same
-    * conclusion is harmless. A DV file with ANY live reference stays —
-    * its dead rows are inert (planning looks up live basenames only)
-    * and they fold away at the next full rewrite. Returns the archived
-    * rels. */
-  def archiveFullyStale(table: String,
-      liveDataBasenames: Set[String]): Seq[String] = {
-    val files = liveDvFiles(table)
-    if (files.isEmpty) return Nil
-    val fs = new Path(table).getFileSystem(conf)
-    files.flatMap { f =>
+  /** GC at a metadata commit that removed files: the live DV files
+    * (rels) whose every referenced basename has left the live data set
+    * (a COW rewrite, compaction, or overwrite replaced the files it
+    * pointed at — the rewrite read through the DV, so the deletes are
+    * materialized in the new generation). The commit drops them from
+    * its pinned DV set and, once its version is claimed, archives them
+    * ([[archiveDvs]]). A DV file with ANY live reference stays — its
+    * dead rows are inert (planning looks up live basenames only) and
+    * they fold away at the next full rewrite. */
+  def fullyStale(table: String,
+      liveDataBasenames: Set[String]): Seq[String] =
+    liveDvFiles(table).filter { f =>
       val refs = collection.mutable.Set.empty[String]
       val r = new GraftPartitionReader(f, dvSchema, Array.empty)
       try while (r.next()) refs += r.get().getString(0) finally r.close()
-      if (refs.nonEmpty && refs.forall(!liveDataBasenames.contains(_))) {
-        val rel = GraftTableLog.relativize(table, f)
-        val dest = new Path(new Path(table, GraftTableLog.ArchiveDir), rel)
-        fs.mkdirs(dest.getParent)
-        // a lost race (concurrent GC archived it first) is fine — the
-        // winner moved the same bytes to the same place
-        if (fs.exists(new Path(f)) && !fs.exists(dest))
-          require(fs.rename(new Path(f), dest),
-            s"graft deletes: archive rename failed for $rel under $table")
-        Some(rel)
-      } else None
+      refs.nonEmpty && refs.forall(!liveDataBasenames.contains(_))
+    }.map(GraftTableLog.relativize(table, _))
+
+  /** Archive DV files (rels). Archived, not deleted: older snapshots
+    * still reference them, and [[resolveDvRels]] finds them in the
+    * archive until vacuum reclaims them. Staleness is monotone once
+    * committed (an archived basename never returns to the live set —
+    * names are UUID-unique), so a concurrent committer archiving the
+    * same file first is harmless. */
+  def archiveDvs(table: String, rels: Seq[String]): Unit = {
+    val fs = new Path(table).getFileSystem(conf)
+    rels.foreach { rel =>
+      val live = new Path(table, rel)
+      val dest = new Path(new Path(table, GraftTableLog.ArchiveDir), rel)
+      fs.mkdirs(dest.getParent)
+      if (fs.exists(live) && !fs.exists(dest))
+        require(fs.rename(live, dest),
+          s"graft deletes: archive rename failed for $rel under $table")
     }
   }
 }

@@ -32,10 +32,12 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   *   - DELETE(id) → one `(basename, pos)` row in a positional-delete
   *     sidecar staged next to the data files ([[GraftDeletes]]);
   *   - INSERT(row) → an ordinary staged data file (the updated images);
-  *   - COMMIT → rename the DV files into `_graft_deletes/` (shrink:
-  *     deleted rows vanish), rename the image files in (grow), then one
-  *     metadata version whose snapshot pins the new DV set. No data
-  *     file is ever read-and-rewritten.
+  *   - COMMIT → under the table's rewrite lock, check every data file
+  *     the DVs reference is still live, then the [[GraftSwap]]: rename
+  *     the DV files into `_graft_deletes/` (shrink: deleted rows
+  *     vanish), rename the image files in (grow), then one metadata
+  *     version whose snapshot pins the new DV set; a failed grow is
+  *     undone. No data file is ever read-and-rewritten.
   *
   * 100 TB posture: a one-row UPDATE against a 1 GB file costs one tiny
   * sidecar + one tiny image file instead of a 1 GB rewrite — the write
@@ -115,14 +117,14 @@ class GraftDeltaWrite(path: String, tableSchema: StructType)
       try GraftBloom.readSpec(path) catch { case _: Exception => None },
       // CHECK constraints apply to MOR update images too
       GraftConstraints.boundFor(
-        org.apache.spark.sql.SparkSession.active, path, tableSchema))
+        org.apache.spark.sql.SparkSession.active, path, tableSchema),
+      GraftSerConf.session())
 
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
-    val root = new Path(path)
-    val fs = root.getFileSystem(conf)
+    val fs = new Path(path).getFileSystem(conf)
     val staging = new Path(path, s"_staging-$writeId")
     val msgs = messages.collect { case m: GraftDeltaCommitMessage => m }
-    val dataRels = msgs.flatMap(_.files)
+    val dataRels = msgs.flatMap(_.files).toSeq
     val dvNames = msgs.flatMap(_.dvFiles)
     if (dataRels.isEmpty && dvNames.isEmpty) {
       // nothing matched and nothing inserted: a provable no-op
@@ -139,68 +141,29 @@ class GraftDeltaWrite(path: String, tableSchema: StructType)
     // still live; a conflict refuses (retryable) with staging cleaned
     // and the table untouched.
     GraftConflicts.withRewriteLock(path) {
-    if (dvNames.nonEmpty) {
-      val refs = GraftDeletes.readPositions(
-        dvNames.map(n => new Path(staging, s"_dv/$n").toString).toSeq)
-        .keySet
-      val live = (try GraftParquetV2.listFiles(path) catch {
-        case _: java.io.FileNotFoundException => Nil
-      }).map(f => new Path(f).getName).toSet
-      val gone = refs.diff(live)
-      if (gone.nonEmpty) {
-        fs.delete(staging, true)
-        throw new GraftConcurrentWriteException(
-          s"graft delta commit conflict under $path: ${gone.size} " +
-            s"file(s) this row-level operation read were replaced by a " +
-            s"concurrent rewrite [${gone.take(3).mkString(", ")}] — " +
-            "re-run the operation against the new head")
+      if (dvNames.nonEmpty) {
+        val refs = GraftDeletes.readPositions(
+          dvNames.map(n => new Path(staging, s"_dv/$n").toString).toSeq)
+          .keySet
+        val live = (try GraftParquetV2.listFiles(path) catch {
+          case _: java.io.FileNotFoundException => Nil
+        }).map(f => new Path(f).getName).toSet
+        val gone = refs.diff(live)
+        if (gone.nonEmpty) {
+          fs.delete(staging, true)
+          throw new GraftConcurrentWriteException(
+            s"graft delta commit conflict under $path: ${gone.size} " +
+              s"file(s) this row-level operation read were replaced by a " +
+              s"concurrent rewrite [${gone.take(3).mkString(", ")}] — " +
+              "re-run the operation against the new head")
+        }
       }
+      // DVs in before images (the swap's shrink-then-grow: deleted
+      // rows vanish before their replacement images appear); every
+      // prior file carries by reference — nothing is removed
+      GraftSwap.commit(path, writeId, staging, dataRels,
+        msgs.flatMap(_.stats).toSeq, dvNames = dvNames.toSeq)
     }
-    // 1. DV files in FIRST (shrink): a racing reader sees deleted rows
-    //    vanish before their replacement images appear — the overwrite
-    //    protocol's shrink-then-grow rule; the union (old row + new
-    //    image both visible) would be duplicated rows, wrong rather
-    //    than merely partial
-    val dvDir = new Path(root, GraftDeletes.DeletesDir)
-    fs.mkdirs(dvDir)
-    var movedDv = List.empty[String]
-    def dropDv(): Unit = movedDv.foreach(n =>
-      fs.delete(new Path(dvDir, n), false))
-    try {
-      dvNames.foreach { name =>
-        require(fs.rename(new Path(staging, s"_dv/$name"),
-          new Path(dvDir, name)),
-          s"graft delta commit: DV rename failed for $name under $path")
-        movedDv ::= name
-      }
-    } catch { case e: Throwable => dropDv(); throw e }
-    // 2. inserted images in (grow) — staging mirrors the final layout,
-    //    rename-only; failure compensates (images out, then DVs out, so
-    //    the table returns to the pre-op generation)
-    var moved = List.empty[String]
-    try {
-      dataRels.foreach { rel =>
-        val dest = new Path(root, rel)
-        if (rel.contains("/")) fs.mkdirs(dest.getParent)
-        require(fs.rename(new Path(staging, rel), dest),
-          s"graft delta commit: rename failed for $rel under $path")
-        moved ::= rel
-      }
-    } catch {
-      case e: Throwable =>
-        moved.foreach(rel => fs.delete(new Path(root, rel), false))
-        dropDv()
-        throw e
-    }
-    fs.delete(staging, true)
-    // 3. one metadata commit: every prior file carries by reference
-    //    (nothing was removed — that is the point), the images add
-    //    their own footer stats, and the snapshot pins the grown DV set
-    val entries = GraftParquetWrite.rawManifestEntries(path) ++
-      msgs.flatMap(_.stats)
-    GraftParquetWrite.commitMetadata(path, entries, writeId,
-      dvMaybeStale = false) // adds DVs and images, removes nothing
-    } // withRewriteLock
   }
 
   override def abort(messages: Array[WriterCommitMessage]): Unit = {
@@ -213,12 +176,15 @@ case class GraftDeltaWriterFactory(path: String, schema: StructType,
     writeId: String, partCols: Seq[String],
     bloomSpec: Option[(Seq[String], Double)] = None,
     constraints: Seq[(String,
-      org.apache.spark.sql.catalyst.expressions.Expression)] = Nil)
+      org.apache.spark.sql.catalyst.expressions.Expression)] = Nil,
+    // the driver session's Hadoop conf, shipped so the task's image
+    // files AND its DV sidecar keep spark.hadoop.* settings
+    serConf: GraftSerConf = GraftSerConf.session())
     extends DeltaWriterFactory {
   override def createWriter(partitionId: Int, taskId: Long)
       : DeltaWriter[InternalRow] =
     new GraftDeltaWriter(path, schema, writeId, partitionId, taskId,
-      partCols, bloomSpec, constraints)
+      partCols, bloomSpec, constraints, serConf)
 }
 
 /** Task half: inserts flow to an ordinary [[GraftDataWriter]]; deletes
@@ -230,11 +196,12 @@ class GraftDeltaWriter(path: String, schema: StructType, writeId: String,
     partitionId: Int, taskId: Long, partCols: Seq[String],
     bloomSpec: Option[(Seq[String], Double)] = None,
     constraints: Seq[(String,
-      org.apache.spark.sql.catalyst.expressions.Expression)] = Nil)
+      org.apache.spark.sql.catalyst.expressions.Expression)] = Nil,
+    serConf: GraftSerConf = GraftSerConf.session())
     extends DeltaWriter[InternalRow] {
   private val inner =
     new GraftDataWriter(path, schema, writeId, partitionId, taskId,
-      partCols, bloomSpec, constraints)
+      partCols, bloomSpec, constraints, serConf)
   private val staging = new Path(path, s"_staging-$writeId")
   private val dvName = f"dv-$partitionId%05d-$taskId-$writeId.parquet"
   private var dvWriter: ParquetWriter[Group] = null
@@ -250,8 +217,7 @@ class GraftDeltaWriter(path: String, schema: StructType, writeId: String,
     val base = full.substring(full.lastIndexOf('/') + 1)
     if (dvWriter == null) {
       val (w, factory) = GraftDeletes.openDvWriter(
-        new Path(new Path(staging, "_dv"), dvName),
-        new org.apache.hadoop.conf.Configuration())
+        new Path(new Path(staging, "_dv"), dvName), serConf.value)
       dvWriter = w
       dvFactory = factory
     }
@@ -284,7 +250,7 @@ class GraftDeltaWriter(path: String, schema: StructType, writeId: String,
   override def abort(): Unit = {
     if (!closed && dvWriter != null) { dvWriter.close(); closed = true }
     inner.abort()
-    val fs = staging.getFileSystem(new org.apache.hadoop.conf.Configuration())
+    val fs = staging.getFileSystem(serConf.value)
     fs.delete(new Path(new Path(staging, "_dv"), dvName), false)
   }
 

@@ -348,35 +348,31 @@ object GraftMaintenance {
 
   /** Shared selective-rewrite commit: the REWRITTEN rows replace the
     * CANDIDATE files; every other file is untouched — no data read, no
-    * data written, just carried into the new version. Visibility for a
-    * racing reader is the overwrite protocol's shrink-then-grow (the
-    * candidates archive before the rewritten files rename in), never
-    * a duplicated-rows union.
+    * data written, just carried into the new version by the
+    * [[GraftSwap]] (candidates archived before the rewritten files
+    * rename in, a failed grow undone).
     *
     * CONCURRENCY ([[GraftConflicts]]): the expensive compute (the
     * scratch write, which reads the still-live candidates) runs
-    * UNLOCKED so disjoint rewrites overlap their Spark jobs; the
-    * physical shrink-then-grow window and the metadata commit run
-    * under the table's cross-JVM rewrite lock, where the operation's
-    * read snapshot (`read`, captured before it planned) is validated
-    * against the head — a stale read refuses with a retryable
-    * [[GraftConcurrentWriteException]] and the table untouched.
-    * `serializable = true` (MERGE) refuses on ANY head movement;
-    * the default snapshot level refuses only when a concurrent commit
-    * removed a candidate or changed merge-on-read deletes touching
-    * one. */
+    * UNLOCKED so disjoint rewrites overlap their Spark jobs; the swap
+    * runs under the table's cross-JVM rewrite lock, where the
+    * operation's read snapshot (`read`, captured before it planned) is
+    * validated against the head — a stale read refuses with a
+    * retryable [[GraftConcurrentWriteException]] and the table
+    * untouched. `serializable = true` (MERGE) refuses on ANY head
+    * movement; the default snapshot level refuses only when a
+    * concurrent commit removed a candidate or changed merge-on-read
+    * deletes touching one. */
   private def rewriteCommit(spark: SparkSession, table: String,
       candidates: Seq[String], rewritten: DataFrame,
       partCols: Seq[String], read: GraftConflicts.RewriteReadState,
       serializable: Boolean = false): Long = {
-    val root = new Path(table)
-    val fs = root.getFileSystem(conf)
     val tmp = s"$table/_rewrite-${java.util.UUID.randomUUID()}"
     try {
-      // 1. write the rewritten rows to an invisible scratch graft table
-      //    (the job READS the candidate files — they are still live).
-      //    A concurrent rewrite that archives a candidate mid-job fails
-      //    this read — retype the failure as the conflict it is
+      // write the rewritten rows to an invisible scratch graft table
+      // (the job READS the candidate files — they are still live). A
+      // concurrent rewrite that archives a candidate mid-job fails
+      // this read — retype the failure as the conflict it is
       val w = rewritten.write
         .format("graft.sources.GraftParquetTableProvider")
         .option("path", tmp).mode(org.apache.spark.sql.SaveMode.Append)
@@ -385,66 +381,29 @@ object GraftMaintenance {
           w.option("partitionBy", partCols.mkString(","))
         else w).save()
       }
-      GraftConflicts.withRewriteLock(table) {
-      GraftConflicts.validateRewrite(table, read, candidates, serializable)
-      // 2. candidates out (shrink) …
-      var archived = List.empty[String] // rels, for compensation
-      def unarchive(): Unit = archived.foreach { rel =>
-        val src = new Path(new Path(root, GraftTableLog.ArchiveDir), rel)
-        if (!fs.rename(src, new Path(root, rel)))
-          System.err.println(s"[graft] rewrite compensation FAILED to " +
-            s"restore $rel under $table - restore it manually from " +
-            GraftTableLog.ArchiveDir)
-      }
-      try {
-        candidates.foreach { f =>
-          GraftTableLog.archiveFile(table, f)
-          archived ::= GraftTableLog.relativize(table, f)
-        }
-      } catch { case e: Throwable => unarchive(); throw e }
-      // 3. … rewritten files in (grow); staged layout mirrors the final
-      //    one, so this is rename-only. A failure here COMPENSATES: the
-      //    partially-moved rewritten files are removed FIRST (no
-      //    duplicated kept rows), then the archived candidates rename
-      //    back — the table returns to the pre-op generation instead of
-      //    the kept rows silently vanishing with the candidates.
-      var movedSoFar = List.empty[String]
       // an all-rows rewrite to nothing (truncate) commits ZERO files —
       // the scratch table then has no data directory at all
-      val tmpFiles = try GraftParquetV2.listFiles(tmp) catch {
+      val rels = (try GraftParquetV2.listFiles(tmp) catch {
         case _: java.io.FileNotFoundException => Nil
-      }
-      val moved =
-        try tmpFiles.map { f =>
-          val rel = GraftTableLog.relativize(tmp, f)
-          val dest = new Path(root, rel)
-          if (rel.contains("/")) fs.mkdirs(dest.getParent)
-          require(fs.rename(new Path(f), dest),
-            s"graft rewrite: rename failed for $rel under $table")
-          movedSoFar ::= rel
-          rel
-        } catch {
-          case e: Throwable =>
-            movedSoFar.foreach(rel => fs.delete(new Path(root, rel), false))
-            unarchive()
-            throw e
-        }
-      // 4. metadata: prior manifest minus the candidates, plus the
-      //    scratch table's own entries (footer stats rode its write)
-      val candBase = candidates.map(f => new Path(f).getName).toSet
-      val entries = GraftParquetWrite.rawManifestEntries(table)
-        .filterNot(e => candBase.contains(e.file)) ++
-        GraftParquetWrite.rawManifestEntries(tmp)
-      require(moved.map(r => new Path(r).getName).toSet
-        .subsetOf(entries.map(_.file).toSet) || moved.isEmpty,
+      }).map(GraftTableLog.relativize(tmp, _))
+      // the scratch table's own manifest: footer stats rode its write
+      val entries = GraftParquetWrite.rawManifestEntries(tmp)
+      require(rels.map(r => new Path(r).getName).toSet
+        .subsetOf(entries.map(_.file).toSet),
         s"graft rewrite: scratch manifest under $tmp is missing entries")
-      GraftParquetWrite.commitMetadata(table, entries,
-        java.util.UUID.randomUUID().toString)
+      GraftConflicts.withRewriteLock(table) {
+        GraftConflicts.validateRewrite(table, read, candidates, serializable)
+        GraftSwap.commit(table, java.util.UUID.randomUUID().toString,
+          new Path(tmp), rels, entries, archive = candidates)
+      }
       GraftTableLog.latestVersion(table).getOrElse(
         throw new IllegalStateException(
           s"graft rewrite: commit left no log version under $table"))
-      } // withRewriteLock
-    } finally fs.delete(new Path(tmp), true)
+    } catch {
+      case e: Throwable => // the swap removed the scratch on success
+        new Path(tmp).getFileSystem(conf).delete(new Path(tmp), true)
+        throw e
+    }
   }
 
   /** ROW-LEVEL DELETE with zone-map-selective rewrite: only the files
@@ -703,7 +662,7 @@ object GraftMaintenance {
     * DV accumulation: cost ∝ DV'd files, not table size, where a full
     * [[compact]] rewrites everything. The commit's DV housekeeping
     * then archives the now-fully-stale sidecars
-    * ([[GraftDeletes.archiveFullyStale]]), so the read-side ordinal
+    * ([[GraftDeletes.fullyStale]]), so the read-side ordinal
     * merge disappears entirely. Returns the new head version (or the
     * current one when the table carries no deletes — a free no-op). */
   def rewriteDeletes(spark: SparkSession, table: String): Long = {
@@ -925,11 +884,12 @@ object GraftMaintenance {
     // 3. commit: the restored version's own manifest rows become the
     //    new head's manifest (zone maps travel with the rollback); the
     //    snapshot is built from the live listing, which now equals the
-    //    restored file set. DV surgery above was exact — skip the
-    //    staleness rescan.
+    //    restored file set. DV surgery above was exact (the restored
+    //    version's own DV set), so no sidecar can be stranded and the
+    //    commit passes no `removed` files — no staleness rescan.
     val entries = GraftTableLog.readSnapshotEntries(table, version)
     GraftParquetWrite.commitMetadata(table, entries,
-      java.util.UUID.randomUUID().toString, dvMaybeStale = false)
+      java.util.UUID.randomUUID().toString)
     GraftTableLog.latestVersion(table).getOrElse(
       throw new IllegalStateException(
         s"graft rollback: commit left no log version under $table"))
@@ -1030,8 +990,7 @@ object GraftMaintenance {
     // the move) ride into the new head so pruning survives adoption
     val entries = GraftTableLog.readSnapshotEntries(table, head)
     GraftParquetWrite.commitMetadata(table, entries,
-      s"ff-$branch-${java.util.UUID.randomUUID().toString}",
-      dvMaybeStale = false)
+      s"ff-$branch-${java.util.UUID.randomUUID().toString}")
     GraftTableLog.dropBranchRef(table, branch)
     val v = GraftTableLog.latestVersion(table).getOrElse(
       throw new IllegalStateException(

@@ -258,8 +258,10 @@ class GraftParquetTable(path: String, tableSchema: StructType,
       () => new GraftDeltaOperation(path, tableSchema, info.command(),
         aliases)
     else
+      // the read snapshot the commit validates: captured here, before
+      // the rewrite's scan plans, so it is never newer than the read
       () => new GraftRowLevelOperation(path, tableSchema, info.command(),
-        aliases)
+        aliases, GraftConflicts.captureRead(path))
   }
 }
 
@@ -1346,7 +1348,10 @@ case class GraftPartitionReaderFactory(required: StructType,
     // presence correctly demotes an agg reader's footer-only fast path)
     val conj = pushed ++ runtimeHolder.filters
     val hc = serConf.value
-    aggs match {
+    // a planned file gone at open was archived by a concurrent rewrite's
+    // commit: the retryable conflict it is, not an I/O failure (a SQL
+    // MERGE racing a compaction re-plans and retries)
+    try aggs match {
       case Some(specs) if groupBy.nonEmpty =>
         new GraftGroupedAggPartitionReader(file, groupBy, specs, conj,
           fp.deletes, aliases, hc)
@@ -1361,6 +1366,11 @@ case class GraftPartitionReaderFactory(required: StructType,
           new GraftPartitionReader(file, required, conj, limit, fp.deletes,
             aliases, hc)
       }
+    } catch {
+      case e: java.io.FileNotFoundException =>
+        throw new GraftConcurrentWriteException(s"graft scan: $file " +
+          "vanished after planning (a concurrent rewrite committed) — " +
+          "re-plan against the new head and retry", e)
     }
   }
 }

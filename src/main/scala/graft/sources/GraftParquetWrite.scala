@@ -36,11 +36,12 @@ import org.apache.spark.sql.types._
   *      zone-map entries to the driver in its commit message (the footer
   *      I/O is paid where the write ran, exactly like
   *      [[Sinks.parquetWithStats]]'s executor-side stats job);
-  *   2. driver commit — for truncate-overwrite — first deletes the
-  *      pre-existing data files (a racing reader sees a shrinking then
-  *      growing table, never the union of two generations), then
-  *      renames staged files into the table directory (same-filesystem
-  *      renames: O(1) metadata ops, no data copy), and
+  *   2. driver commit ([[GraftSwap]]) — for truncate-overwrite — first
+  *      archives the pre-existing data files (a racing reader sees a
+  *      shrinking then growing table, never the union of two
+  *      generations), then renames staged files into the table
+  *      directory (same-filesystem renames: O(1) metadata ops, no data
+  *      copy), and
   *   3. rewrites the manifest LAST — prior entries (append keeps them,
   *      truncate drops them) plus the new files' entries go to a
   *      `_graft_stats.parquet.tmp-<writeId>` directory which is then
@@ -183,8 +184,9 @@ class GraftWriteBuilder(path: String, info: LogicalWriteInfo,
     // (retryable) if a concurrent commit moved the table, instead of
     // truncating the concurrent write away. Absent for user
     // overwrites, whose semantics are "replace whatever is there".
-    val conflictReadVersion =
-      Option(info.options.get("conflictReadVersion")).map(_.toLong)
+    val conflictRead = Option(info.options.get("conflictReadVersion"))
+      .map(v => GraftConflicts.RewriteReadState(v.toLong,
+        GraftDeletes.liveDvRels(path).toSet))
     // `txnId`: idempotent-append marker (the Delta txnAppId:txnVersion
     // discipline, one string) — a batch append carrying a txnId the
     // table has already committed becomes a NO-OP instead of a
@@ -206,7 +208,7 @@ class GraftWriteBuilder(path: String, info: LogicalWriteInfo,
     }
     new GraftBatchWrite(path, info.schema(), doTruncate, partCols,
       dynamic, info.queryId(), bloomSpec, constraints, branch,
-      conflictReadVersion, txnId)
+      conflictRead, txnId)
   }
 }
 
@@ -217,7 +219,7 @@ class GraftBatchWrite(path: String, schema: StructType, truncate: Boolean,
     constraints: Seq[(String,
       org.apache.spark.sql.catalyst.expressions.Expression)] = Nil,
     branch: Option[String] = None,
-    conflictReadVersion: Option[Long] = None,
+    conflictRead: Option[GraftConflicts.RewriteReadState] = None,
     txnId: Option[String] = None)
     extends Write with BatchWrite
     with org.apache.spark.sql.connector.write.streaming.StreamingWrite {
@@ -274,26 +276,19 @@ class GraftBatchWrite(path: String, schema: StructType, truncate: Boolean,
     val marker = new Path(
       new Path(path, GraftParquetWrite.EpochDir), s"$queryId-$epochId")
     if (fs.exists(marker)) { fs.delete(staging, true); return }
-    val committed = messages.collect {
-      case GraftCommitMessage(fsq, stats) if fsq.nonEmpty => (fsq, stats)
-    }
-    committed.foreach { case (fsq, _) =>
-      fsq.foreach { f =>
-        val dest = new Path(path, f)
-        if (f.contains("/")) fs.mkdirs(dest.getParent)
-        require(fs.rename(new Path(staging, f), dest),
-          s"graft parquet v2 streaming commit: rename failed for $f")
-      }
-    }
-    fs.delete(staging, true)
-    if (committed.nonEmpty) {
-      val entries = GraftParquetWrite.rawManifestEntries(path) ++
-        committed.flatMap(_._2)
-      GraftParquetWrite.commitMetadata(path, entries, s"$writeId-$epochId",
-        dvMaybeStale = false) // epoch appends only ADD files
-    }
+    val (rels, entries) = staged(messages)
+    if (rels.nonEmpty)
+      GraftSwap.commit(path, s"$writeId-$epochId", staging, rels, entries)
+    else fs.delete(staging, true)
     fs.mkdirs(marker.getParent)
     fs.create(marker, true).close()
+  }
+
+  /** The staged data files and their manifest rows, over every task. */
+  private def staged(messages: Array[WriterCommitMessage])
+      : (Seq[String], Seq[GraftManifestEntry]) = {
+    val msgs = messages.collect { case m: GraftCommitMessage => m }
+    (msgs.flatMap(_.files).toSeq, msgs.flatMap(_.stats).toSeq)
   }
 
   override def abort(epochId: Long,
@@ -316,126 +311,67 @@ class GraftBatchWrite(path: String, schema: StructType, truncate: Boolean,
     txnMarker.foreach { m =>
       if (fs.exists(m)) { fs.delete(staging, true); return }
     }
-    val committed = messages.collect {
-      case GraftCommitMessage(fsq, stats) if fsq.nonEmpty => (fsq, stats)
+    val (rels, entries) = staged(messages)
+    // BRANCH COMMIT (append-only): files land in the invisible
+    // `_branch_<b>/` lineage dir (main listings never see them), the
+    // snapshot extends the BRANCH head's file set under a global
+    // version number, and the ref re-points. The live stats sidecar is
+    // NOT touched: it prunes MAIN scans, and branch files must stay out
+    // of it — branch reads prune via their snapshot's own entries. An
+    // empty branch append commits nothing.
+    if (branch.isDefined && rels.isEmpty) fs.delete(staging, true)
+    else if (!truncate)
+      GraftSwap.commit(path, writeId, staging, rels, entries, branch = branch)
+    else GraftConflicts.withRewriteLock(path) {
+      // TRUNCATE archives the old generation through the swap's
+      // shrink-then-grow, under the table's rewrite lock
+      // ([[GraftConflicts]]) so its window never interleaves with a
+      // row-level rewrite's. A SELF-READING overwrite (compact —
+      // `conflictRead` set) validates its read serializably: if a
+      // concurrent commit moved the head, truncating would silently
+      // discard that commit, so it refuses with a retryable conflict
+      // instead. A plain user overwrite carries no read state —
+      // replacing whatever is there IS its semantics.
+      conflictRead.foreach(r =>
+        GraftConflicts.validateRewrite(path, r, Nil, serializable = true))
+      GraftSwap.commit(path, writeId, staging, rels, entries,
+        archive = overwritten(rels), carryPrior = dynamicOverwrite)
     }
-    branch.foreach { b =>
-      // BRANCH COMMIT: files rename into the invisible `_branch_<b>/`
-      // lineage dir (main listings never see them), the snapshot
-      // extends the BRANCH head's file set under a global version
-      // number, and the ref re-points. The live stats sidecar is NOT
-      // touched: it prunes MAIN scans, and branch files must stay out
-      // of it — branch reads prune via their snapshot's own entries.
-      val relPrefix = s"_branch_$b/$writeId"
-      committed.foreach { case (fsq, _) =>
-        fsq.foreach { f =>
-          val dest = new Path(path, s"$relPrefix/$f")
-          fs.mkdirs(dest.getParent)
-          require(fs.rename(new Path(staging, f), dest),
-            s"graft parquet v2 branch commit: rename failed for $f")
-        }
-      }
-      fs.delete(staging, true)
-      if (committed.nonEmpty)
-        GraftParquetWrite.commitBranchMetadata(path, b,
-          committed.flatMap(_._1).map(f => s"$relPrefix/$f").toSeq,
-          committed.flatMap(_._2).toSeq, writeId)
-      return
-    }
-    // TRUNCATE deletes the old generation BEFORE renaming the new one
-    // in: a reader racing the commit sees a shrinking-then-growing table
-    // (incomplete — the documented mid-overwrite window) but never the
-    // UNION of both generations, which would be duplicated rows — wrong
-    // rather than merely partial.
-    //
-    // CONCURRENCY: a truncating commit runs under the table's rewrite
-    // lock ([[GraftConflicts]]) — its shrink-then-grow window must not
-    // interleave with a row-level rewrite's. A SELF-READING overwrite
-    // (compact — `conflictReadVersion` set) additionally validates its
-    // read version under the lock: if a concurrent commit moved the
-    // head, truncating would silently discard that commit, so it
-    // refuses with a retryable conflict instead. A plain user
-    // overwrite carries no read version — replacing whatever is there
-    // IS its semantics.
-    def truncatingCommit(): Unit = {
-    conflictReadVersion.foreach { rv =>
-      val head = GraftTableLog.latestVersion(path).getOrElse(0L)
-      if (head != rv) throw new GraftConcurrentWriteException(
-        s"graft compact conflict under $path: the compaction read " +
-          s"version $rv but a concurrent commit moved the head to " +
-          s"$head — committing would truncate that write away; retry " +
-          "the compaction against the new head")
-    }
-    // basenames of files this commit deletes — their manifest rows
-    // must not be carried forward
-    var deleted = Set.empty[String]
-    if (truncate) {
-      // Only a MISSING table dir means "fresh table, nothing to delete".
-      // Any other listing failure (transient IO, permissions) must fail
-      // the commit: swallowing it would rename the staged generation in
-      // NEXT TO the undeleted old one — readers would see the union of
-      // both generations (duplicated rows), the exact wrong-rather-than-
-      // partial outcome this protocol exists to prevent. Failing here
-      // leaves the table on the old generation and job abort cleans the
-      // staging dir.
-      val preExisting = try GraftParquetV2.listFiles(path) catch {
-        case _: java.io.FileNotFoundException => Nil // fresh table
-      }
-      // dynamic partition overwrite: only files under the partition
-      // directories the NEW data touches are replaced; every other
-      // partition (and any flat legacy file) survives, manifest rows
-      // included. Same shrink-then-grow visibility story, scoped to
-      // the touched partitions.
-      val touchedDirs: Set[String] =
-        committed.flatMap(_._1).map { rel =>
-          val cut = rel.lastIndexOf('/')
-          if (cut < 0) "" else rel.substring(0, cut)
-        }.toSet
-      val doomed =
-        if (!dynamicOverwrite) preExisting
-        else preExisting.filter { f =>
-          GraftParquetV2.partitionSpec(path, f) match {
-            case Nil => false // flat legacy file: dynamic spares it
-            case spec => touchedDirs.contains(
-              // compare the RAW directory string, not decoded values —
-              // the writer's encoding is canonical either way
-              new Path(f).getParent.toUri.getPath
-                .stripPrefix(new Path(path).toUri.getPath)
-                .stripPrefix("/")) && spec.nonEmpty
-          }
-        }
-      deleted = doomed.map(f => new Path(f).getName).toSet
-      // ARCHIVE, not delete: the removed generation moves under
-      // `_graft_archive/` (O(1) renames, invisible to live scans) so
-      // every prior log version stays time-travel-readable until
-      // [[GraftMaintenance.vacuum]] reclaims it. Same racing-reader
-      // visibility story as the old delete — shrink, then grow.
-      doomed.foreach(f => GraftTableLog.archiveFile(path, f))
-    }
-    committed.foreach { case (fsq, _) =>
-      fsq.foreach { f =>
-        // f is the RELATIVE path (partition dirs included): staging
-        // mirrors the final layout, so commit is still rename-only
-        val dest = new Path(path, f)
-        if (f.contains("/")) fs.mkdirs(dest.getParent)
-        val ok = fs.rename(new Path(staging, f), dest)
-        require(ok, s"graft parquet v2 write: commit rename failed for $f")
-      }
-    }
-    fs.delete(staging, true)
-    val prior =
-      if (truncate && !dynamicOverwrite) Nil
-      else GraftParquetWrite.rawManifestEntries(path)
-        .filterNot(e => deleted.contains(e.file))
-    GraftParquetWrite.commitMetadata(path,
-      prior ++ committed.flatMap(_._2), writeId,
-      dvMaybeStale = truncate) // appends only ADD files
-    } // truncatingCommit
-    if (truncate) GraftConflicts.withRewriteLock(path)(truncatingCommit())
-    else truncatingCommit()
     txnMarker.foreach { m =>
       fs.mkdirs(m.getParent)
       fs.create(m, true).close()
+    }
+  }
+
+  /** The live files a truncating commit of `rels` replaces: all of
+    * them, or under `partitionOverwriteMode=dynamic` only those in the
+    * partition directories the new data touches (every other partition
+    * and any flat legacy file survives, manifest rows included). */
+  private def overwritten(rels: Seq[String]): Seq[String] = {
+    // Only a MISSING table dir means "fresh table, nothing to replace".
+    // Any other listing failure (transient IO, permissions) must fail
+    // the commit: swallowing it would rename the staged generation in
+    // NEXT TO the unarchived old one — readers would see the union of
+    // both generations (duplicated rows). Failing here leaves the table
+    // on the old generation and job abort cleans the staging dir.
+    val preExisting = try GraftParquetV2.listFiles(path) catch {
+      case _: java.io.FileNotFoundException => Nil // fresh table
+    }
+    if (!dynamicOverwrite) return preExisting
+    val touchedDirs: Set[String] = rels.map { rel =>
+      val cut = rel.lastIndexOf('/')
+      if (cut < 0) "" else rel.substring(0, cut)
+    }.toSet
+    preExisting.filter { f =>
+      GraftParquetV2.partitionSpec(path, f) match {
+        case Nil => false // flat legacy file: dynamic spares it
+        case spec => touchedDirs.contains(
+          // compare the RAW directory string, not decoded values —
+          // the writer's encoding is canonical either way
+          new Path(f).getParent.toUri.getPath
+            .stripPrefix(new Path(path).toUri.getPath)
+            .stripPrefix("/")) && spec.nonEmpty
+      }
     }
   }
 
@@ -835,13 +771,11 @@ object GraftParquetWrite {
     * commit instead of vanishing from it. */
   def commitMetadata(path: String, entries: Seq[GraftManifestEntry],
       writeId: String,
-      // whether this commit could have STRANDED a deletion-vector
-      // sidecar (it removed files from the live set — overwrite,
-      // COW rewrite, compaction). Pure appends/carriers/delta commits
-      // pass false: staleness is monotone and appends only ADD live
-      // basenames, so re-reading every sidecar per epoch would be
-      // all cost, no signal. Default true = conservative.
-      dvMaybeStale: Boolean = true): Unit = {
+      // the files this commit took out of the live set. Only a removal
+      // can STRAND a deletion-vector sidecar (staleness is monotone and
+      // appends only ADD live basenames), so only then are the
+      // sidecars re-read — per append epoch that would be all cost
+      removed: Seq[String] = Nil): Unit = {
     // OPTIMISTIC version claim (concurrent APPENDS commit safely):
     // the snapshot's exclusive create is the claim; a loser re-lists —
     // now seeing the winner's renamed files, which enter its snapshot
@@ -854,6 +788,7 @@ object GraftParquetWrite {
     manifestLocks.computeIfAbsent(path, _ => new Object).synchronized {
       var attempt = 0
       var committed = false
+      var stale = Seq.empty[String]
       while (!committed) {
         // heal an aged-torn HEAD (a crashed writer's last claim):
         // otherwise the torn number stays in the version listing —
@@ -874,16 +809,16 @@ object GraftParquetWrite {
         val rels = (try GraftParquetV2.listFiles(path) catch {
           case _: java.io.FileNotFoundException => Nil
         }).map(GraftTableLog.relativize(path, _))
-        // deletion-vector housekeeping rides the commit: archive DV
+        // deletion-vector housekeeping rides a removing commit: DV
         // files whose every referenced data file has left the live set
         // (a rewrite read through them, so their deletes are
-        // materialized), then record the surviving live DV set in the
-        // snapshot — the version's merge-on-read deletes, pinned
-        if (dvMaybeStale) {
-          val liveBase = rels.map(r => new Path(r).getName).toSet
-          GraftDeletes.archiveFullyStale(path, liveBase)
-        }
-        val dvRels = GraftDeletes.liveDvRels(path)
+        // materialized) drop out of the snapshot's pinned DV set — the
+        // version's merge-on-read deletes — and archive only once the
+        // version is claimed: until then a failed swap may move their
+        // data files back
+        stale = if (removed.isEmpty) Nil else GraftDeletes.fullyStale(path,
+          rels.map(r => new Path(r).getName).toSet)
+        val dvRels = GraftDeletes.liveDvRels(path).filterNot(stale.contains)
         if (GraftTableLog.latestVersion(path).getOrElse(0L) == v0) {
           try {
             GraftTableLog.writeSnapshot(path, v0 + 1L, writeId, rels,
@@ -903,8 +838,23 @@ object GraftParquetWrite {
         // number) carries them — the change feed shows them as that
         // version's delta.
       }
+      // the version is committed, so nothing below may fail it (a swap
+      // would undo a committed write): a stale DV left live is inert —
+      // it names no live file — and the next removing commit archives
+      // it; the live sidecar is advisory pruning metadata, and without
+      // it scans stay conservative
+      try GraftDeletes.archiveDvs(path, stale) catch {
+        case scala.util.control.NonFatal(e) =>
+          System.err.println(s"[graft] stale DV archive failed under " +
+            s"$path after committing its version ($e)")
+      }
     }
-    replaceManifest(path, entries, writeId)
+    try replaceManifest(path, entries, writeId) catch {
+      case scala.util.control.NonFatal(e) =>
+        System.err.println(s"[graft] manifest write failed under $path " +
+          s"after committing its version ($e) - new files stay " +
+          "unmanifested (conservatively scanned) until the next commit")
+    }
   }
 
   /** The log head a commit claims past, after healing an aged-torn

@@ -30,14 +30,17 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   *     per row inside the ReplaceData query). The planned candidate
   *     list is recorded on the operation for the write's commit.
   *   - '''Write''' ([[GraftRowLevelWrite]]): tasks stage rewritten
-  *     files exactly like a normal batch append; commit is the
-  *     selective-rewrite swap ([[GraftMaintenance.rewriteCommit]]'s
-  *     protocol): archive the candidates (shrink), rename the staged
-  *     files in (grow), commit one new metadata version whose manifest
-  *     is prior − candidates + rewritten. A racing reader sees the
-  *     documented shrink-then-grow window, never a duplicated union;
-  *     failure mid-grow compensates (staged files removed, candidates
-  *     un-archived).
+  *     files exactly like a normal batch append; commit takes the
+  *     table's rewrite lock, validates the read snapshot captured when
+  *     the operation was built ([[GraftConflicts.validateRewrite]]:
+  *     MERGE serializably, UPDATE / DELETE against their candidates),
+  *     and runs the [[GraftSwap]]: archive the candidates (shrink),
+  *     rename the staged files in (grow), commit one new metadata
+  *     version whose manifest is prior − candidates + rewritten. A
+  *     racing reader sees the documented shrink-then-grow window, never
+  *     a duplicated union; a failed grow is undone (staged files back
+  *     out, candidates un-archived). A stale read refuses with a
+  *     retryable [[GraftConcurrentWriteException]], table untouched.
   *
   * 100 TB posture: identical to [[GraftMaintenance.update]] — an
   * UPDATE touching one key range of a clustered table rewrites that
@@ -49,7 +52,9 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * its place. */
 class GraftRowLevelOperation(path: String, tableSchema: StructType,
     cmd: RowLevelOperation.Command,
-    aliases: Map[String, Seq[String]] = Map.empty) extends RowLevelOperation {
+    aliases: Map[String, Seq[String]] = Map.empty,
+    private[sources] val read: GraftConflicts.RewriteReadState)
+    extends RowLevelOperation {
 
   /** Candidate files, recorded at scan PLANNING time (driver), consumed
     * by the write's commit (driver) — one instance spans both halves of
@@ -167,62 +172,29 @@ class GraftRowLevelWrite(path: String, schema: StructType,
       schema)
 
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
-    val root = new Path(path)
-    val fs = root.getFileSystem(conf)
     val staging = new Path(path, s"_staging-$writeId")
     val candidates = op.plannedCandidates.getOrElse(
       throw new IllegalStateException(
         "graft row-level write: commit before the operation's scan was " +
           "planned — ReplaceData contract violated"))
-    val committed = messages.collect {
-      case GraftCommitMessage(fsq, stats) if fsq.nonEmpty => (fsq, stats)
-    }
-    if (candidates.isEmpty && committed.isEmpty) {
+    val msgs = messages.collect { case m: GraftCommitMessage => m }
+    val rels = msgs.flatMap(_.files).toSeq
+    if (candidates.isEmpty && rels.isEmpty) {
       // zone maps refuted every file: a provable no-op — no new version
-      fs.delete(staging, true)
+      staging.getFileSystem(conf).delete(staging, true)
       return
     }
-    // 1. candidates out (shrink) — archived, so every prior version
-    //    stays time-travel-readable until vacuum
-    var archived = List.empty[String]
-    def unarchive(): Unit = archived.foreach { rel =>
-      val src = new Path(new Path(root, GraftTableLog.ArchiveDir), rel)
-      if (!fs.rename(src, new Path(root, rel)))
-        System.err.println(s"[graft] row-level commit compensation FAILED " +
-          s"to restore $rel under $path - restore it manually from " +
-          GraftTableLog.ArchiveDir)
+    // the candidates out, the rewritten files in, one version whose
+    // manifest is prior − candidates + rewritten: under the rewrite
+    // lock, after validating the read snapshot — MERGE serializably
+    // (its insert decisions read the whole table), UPDATE / DELETE
+    // against their candidate files
+    GraftConflicts.withRewriteLock(path) {
+      GraftConflicts.validateRewrite(path, op.read, candidates,
+        serializable = op.command() == RowLevelOperation.Command.MERGE)
+      GraftSwap.commit(path, writeId, staging, rels,
+        msgs.flatMap(_.stats).toSeq, archive = candidates)
     }
-    try {
-      candidates.foreach { f =>
-        GraftTableLog.archiveFile(path, f)
-        archived ::= GraftTableLog.relativize(path, f)
-      }
-    } catch { case e: Throwable => unarchive(); throw e }
-    // 2. rewritten files in (grow) — staging mirrors the final layout,
-    //    so this is rename-only; failure compensates (moved files out
-    //    first, then candidates back — no kept row ever vanishes)
-    var moved = List.empty[String]
-    try {
-      committed.flatMap(_._1).foreach { rel =>
-        val dest = new Path(root, rel)
-        if (rel.contains("/")) fs.mkdirs(dest.getParent)
-        require(fs.rename(new Path(staging, rel), dest),
-          s"graft row-level commit: rename failed for $rel under $path")
-        moved ::= rel
-      }
-    } catch {
-      case e: Throwable =>
-        moved.foreach(rel => fs.delete(new Path(root, rel), false))
-        unarchive()
-        throw e
-    }
-    fs.delete(staging, true)
-    // 3. one metadata commit: prior manifest minus the candidates, plus
-    //    the rewritten files' own footer stats (rode the task commits)
-    val candBase = candidates.map(f => new Path(f).getName).toSet
-    val entries = GraftParquetWrite.rawManifestEntries(path)
-      .filterNot(e => candBase.contains(e.file)) ++ committed.flatMap(_._2)
-    GraftParquetWrite.commitMetadata(path, entries, writeId)
   }
 
   override def abort(messages: Array[WriterCommitMessage]): Unit = {

@@ -66,13 +66,22 @@ object RewriteRaceDryRun {
   }
 
   /** One writer process: `n` rounds of MERGE (mode=merge — private +
-    * shared keys, payload = (writer, seq)) or compact (mode=compact). */
+    * shared keys, payload = (writer, seq)), the same MERGE as SQL
+    * `MERGE INTO` through a `graft_lake` catalog whose warehouse holds
+    * the table (mode=sql-merge — the DSv2 copy-on-write path lake
+    * merges and drains take), or compact (mode=compact). */
   private def child(table: String, tag: String, mode: String,
       n: Int): Unit = {
     val spark = SparkSession.builder().master("local[2]")
       .config("spark.sql.shuffle.partitions", "2")
       .config("spark.ui.enabled", "false").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
+    // sql-merge tables live at <warehouse>/<namespace>/<name>
+    val f = new java.io.File(table)
+    spark.conf.set("spark.sql.catalog.graft_lake", "graft.sources.GraftCatalog")
+    spark.conf.set("spark.sql.catalog.graft_lake.warehouse",
+      f.getParentFile.getParent)
+    val target = s"graft_lake.${f.getParentFile.getName}.${f.getName}"
     var conflicts = 0
     (0 until n).foreach { seq =>
       mode match {
@@ -82,6 +91,16 @@ object RewriteRaceDryRun {
             keys.map(k => (k, tag, seq))).toDF("key", "writer", "seq")
           conflicts += committed {
             graft.sources.GraftMaintenance.merge(spark, table, src, "key")
+          }
+        case "sql-merge" =>
+          val keys = (privateKeys(tag) ++ SharedKeys).map(_.toLong)
+          spark.createDataFrame(keys.map(k => (k, tag, seq)))
+            .toDF("key", "writer", "seq").createOrReplaceTempView("race_src")
+          conflicts += committed {
+            spark.sql(s"""MERGE INTO $target t USING race_src s
+                         |ON t.key = s.key
+                         |WHEN MATCHED THEN UPDATE SET *
+                         |WHEN NOT MATCHED THEN INSERT *""".stripMargin)
           }
         case "compact" =>
           conflicts += committed {
@@ -102,15 +121,19 @@ object RewriteRaceDryRun {
     spark.sparkContext.setLogLevel("ERROR")
     println(race(spark, 5, "merge"))
     println(race(spark, 5, "compact"))
+    println(race(spark, 5, "compact", modeA = "sql-merge"))
     spark.stop()
   }
 
-  /** Spawn writer a (always MERGE) and writer b (`modeB`: "merge" or
-    * "compact") against one fresh seeded table; validate no lost
-    * update; return the RACE summary line. Shared with
-    * RewriteRaceSpec. */
-  def race(spark: SparkSession, n: Int, modeB: String): String = {
-    val table = s"/tmp/rewrite_race_${java.util.UUID.randomUUID()}"
+  /** Spawn writer a (`modeA`: "merge" or "sql-merge") and writer b
+    * (`modeB`: "merge" or "compact") against one fresh seeded table;
+    * validate no lost update; return the RACE summary line. Shared
+    * with RewriteRaceSpec. */
+  def race(spark: SparkSession, n: Int, modeB: String,
+      modeA: String = "merge"): String = {
+    // a warehouse root holding the table as namespace `race`, name `t`
+    val root = s"/tmp/rewrite_race_${java.util.UUID.randomUUID()}"
+    val table = s"$root/race/t"
     // seed: untouched keys prove carry-through; 4 files so compaction
     // and merges have real candidate sets to race over
     spark.createDataFrame(
@@ -121,7 +144,7 @@ object RewriteRaceDryRun {
     def spawn(tag: String, mode: String): Process = RaceHarness.spawn(
       "graft.RewriteRaceDryRun", table, tag, Seq(mode, n.toString))
     val t0 = System.nanoTime()
-    val a = spawn("a", "merge")
+    val a = spawn("a", modeA)
     val b = spawn("b", modeB)
     val ea = a.waitFor()
     val eb = b.waitFor()
@@ -178,13 +201,13 @@ object RewriteRaceDryRun {
     val versions = graft.sources.GraftTableLog.versions(table)
     require(versions == (1L to versions.size.toLong),
       s"versions must be dense, got $versions")
-    val line = f"RACE ok=true mode=merge-vs-$modeB rounds_each=$n " +
+    val line = f"RACE ok=true mode=$modeA-vs-$modeB rounds_each=$n " +
       f"conflicts_a=$ca conflicts_b=$cb versions=${versions.size} " +
       f"rows=${rows.length} wall_s=$wall%.1f"
-    val p = new org.apache.hadoop.fs.Path(table)
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
     Seq("a", "b").foreach(t => // kept on failure
       RaceHarness.childLog(table, t).delete())
+    val p = new org.apache.hadoop.fs.Path(root)
+    p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
     line
   }
 }

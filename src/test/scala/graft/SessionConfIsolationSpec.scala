@@ -131,4 +131,27 @@ class SessionConfIsolationSpec extends SparkSpec {
     } finally walk.close()
     assert(sites == Set("graft/sources/GraftParquetIO.scala"))
   }
+
+  test("src/main builds no bare Hadoop Configuration beyond sessionConf's fallback") {
+    // a bare conf drops spark.hadoop.* settings and re-parses Hadoop's
+    // XML defaults; driver code takes the session's cached conf, task
+    // code the shipped GraftSerConf. The one exception is the
+    // no-session fallback of GraftParquetWrite.sessionConf itself.
+    val bare = """new (org\.apache\.hadoop\.conf\.)?Configuration\(\)""".r
+    val root = java.nio.file.Paths.get("src", "main", "scala")
+    val walk = java.nio.file.Files.walk(root)
+    val sites = try {
+      import scala.jdk.CollectionConverters._
+      walk.iterator.asScala.filter(_.toString.endsWith(".scala")).toSeq
+        .flatMap { f =>
+          java.nio.file.Files.readAllLines(f).asScala.map(_.trim)
+            .filterNot(l => l.startsWith("*") || l.startsWith("//"))
+            .filter(l => bare.findFirstIn(l).isDefined)
+            .map(l => s"${root.relativize(f)}: $l")
+        }
+    } finally walk.close()
+    assert(sites == Seq(
+      "graft/sources/GraftParquetWrite.scala: case None => new Configuration()"),
+      sites.mkString("\n"))
+  }
 }
