@@ -46,11 +46,8 @@ object Graphs {
     * MEASURED node/frontier count, never an estimate — checkpointed
     * frames carry no size statistics, so the planner would otherwise
     * sort-merge every iteration, re-sorting the (big) edge relation per
-    * round for a join whose other side is model-scale. Overridable via
-    * -Dgraft.graph.broadcastRows for clusters with tight driver memory. */
-  private def broadcastRows: Long =
-    sys.props.get("graft.graph.broadcastRows").map(_.toLong)
-      .getOrElse(2000000L)
+    * round for a join whose other side is model-scale. */
+  private val broadcastRows = 2000000L
 
   /** Single-flight guard (r17, VERDICT r16 #3): the width is a
     * session-global conf, so two CONCURRENT graph loops on one session

@@ -27,16 +27,19 @@ class GraftConcurrentWriteException(msg: String, cause: Throwable = null)
   * writer class — commits that REMOVE files from the live set or add
   * deletion vectors. Every one of them holds the lock (and, where it
   * read the table, validates) around its [[GraftSwap]]:
-  *   - SQL `UPDATE` / `MERGE INTO` / non-metadata `DELETE` and every
-  *     `TableDrain` epoch (copy-on-write, [[GraftRowLevelWrite]]: read
-  *     captured when the operation is built, MERGE serializable);
-  *   - SQL merge-on-read commits ([[GraftDeltaWrite]]: no read state —
+  *   - SQL `UPDATE` / `MERGE INTO` / `DELETE`, the Scala API's
+  *     [[GraftMaintenance]] delete / update / merge (the same Spark
+  *     commands) and every `TableDrain` epoch (copy-on-write,
+  *     [[GraftRowLevelWrite]]: read captured when the operation is
+  *     built, MERGE serializable);
+  *   - merge-on-read commits ([[GraftDeltaWrite]]: no read state —
   *     it checks instead that every data file its DVs reference is
   *     still live);
+  *   - `TRUNCATE` ([[GraftParquetTable.truncateTable]]);
   *   - overwrites (compact validates its `conflictReadVersion`
   *     serializably; a user overwrite replaces whatever is there);
-  *   - the DataFrame rewrites of [[GraftMaintenance]] (UPDATE / DELETE
-  *     / MERGE / compactSmallFiles / recluster / rewriteDeletes).
+  *   - the file-granular rewrites of [[GraftMaintenance]]
+  *     (compactSmallFiles / recluster / rewriteDeletes).
   * Plain appends and streaming epochs take neither. Every swap undoes
   * a failed grow, so a refusal or a failed rename leaves the table on
   * its pre-commit generation. Two cooperating pieces:
@@ -101,7 +104,8 @@ object GraftConflicts {
   /** Age past which a lock is presumed a crashed holder's and broken.
     * The window it guards is O(renames + one metadata commit); 10 min
     * comfortably exceeds it even on a congested object store (same
-    * rationale as `graft.log.healHorizonMs`). */
+    * rationale as the torn-snapshot heal horizon in
+    * [[GraftTableLog]]). */
   private val LockHorizonMs = 600000L
 
   /** Run `body` holding the table's cross-JVM rewrite lock. */

@@ -3,7 +3,10 @@ package graft.sources
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.functions.{coalesce, col, lit, max, min, not}
+import org.apache.spark.sql.catalyst.expressions.Alias
+import org.apache.spark.sql.catalyst.plans.logical.{Assignment, DeleteFromTable, Filter, InsertStarAction, Join, LogicalPlan, MergeIntoTable, Project, UpdateStarAction, UpdateTable}
+import org.apache.spark.sql.functions.{col, lit, max, min}
+import org.apache.spark.sql.graft.Bridge
 
 /** Maintenance operations over a graft table's version log
   * ([[GraftTableLog]]): COMPACT (bin-pack small files into a new
@@ -229,36 +232,14 @@ object GraftMaintenance {
     rewriteCommit(spark, table, files, packed, partCols, read)
   }
 
-  /** The files the pushdown machinery plans for this connector read —
-    * i.e. the files whose zone maps / partition values could NOT
-    * refute the DataFrame's filters. Unsupported predicates push
-    * nothing and every file is a candidate: conservative, never a
-    * wrongly skipped rewrite. */
-  private def plannedFiles(df: DataFrame): Seq[String] = {
-    def scans(p: org.apache.spark.sql.execution.SparkPlan): Seq[String] =
-      p.collect {
-        case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec =>
-          b.scan match {
-            case s: GraftParquetScan => s.planInputPartitions().toSeq
-              .map(_.asInstanceOf[GraftFilePartition].file)
-            case _ => Nil
-          }
-        case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
-          scans(a.executedPlan)
-        case q: org.apache.spark.sql.execution.adaptive.QueryStageExec =>
-          scans(q.plan)
-      }.flatten
-    scans(df.queryExecution.executedPlan).distinct
-  }
-
   private def connectorRead(spark: SparkSession, table: String): DataFrame =
     spark.read.format("graft.sources.GraftParquetTableProvider")
       .option("path", table).load()
 
   /** Read raw parquet `files` under `schema` with deletion vectors
     * APPLIED — the DV-aware twin of `spark.read.parquet` for the
-    * maintenance paths that read candidate files directly (COW
-    * delete/update/merge, the CDC feed). Deletes anti-join on
+    * maintenance paths that read candidate files directly (the
+    * file-granular rewrites, the CDC feed). Deletes anti-join on
     * `(_metadata.file_path basename, _metadata.row_index)` — the
     * built-in source's row ordinal is the same file-absolute position
     * the DV format stores — with the (driver-small, delete-sized) DV
@@ -346,27 +327,26 @@ object GraftMaintenance {
         else throw e
     }
 
-  /** Shared selective-rewrite commit: the REWRITTEN rows replace the
-    * CANDIDATE files; every other file is untouched — no data read, no
-    * data written, just carried into the new version by the
-    * [[GraftSwap]] (candidates archived before the rewritten files
-    * rename in, a failed grow undone).
+  /** File-granular rewrite commit for the maintenance calls
+    * (compactSmallFiles, rewriteDeletes, recluster — row-level
+    * commands run Spark's own rewrite, [[runRowLevel]]): the REWRITTEN
+    * rows replace the CANDIDATE files; every other file is untouched —
+    * no data read, no data written, just carried into the new version
+    * by the [[GraftSwap]] (candidates archived before the rewritten
+    * files rename in, a failed grow undone).
     *
     * CONCURRENCY ([[GraftConflicts]]): the expensive compute (the
     * scratch write, which reads the still-live candidates) runs
     * UNLOCKED so disjoint rewrites overlap their Spark jobs; the swap
     * runs under the table's cross-JVM rewrite lock, where the
     * operation's read snapshot (`read`, captured before it planned) is
-    * validated against the head — a stale read refuses with a
-    * retryable [[GraftConcurrentWriteException]] and the table
-    * untouched. `serializable = true` (MERGE) refuses on ANY head
-    * movement; the default snapshot level refuses only when a
-    * concurrent commit removed a candidate or changed merge-on-read
-    * deletes touching one. */
+    * validated against the head at snapshot level — a concurrent
+    * commit that removed a candidate or changed merge-on-read deletes
+    * touching one refuses with a retryable
+    * [[GraftConcurrentWriteException]] and the table untouched. */
   private def rewriteCommit(spark: SparkSession, table: String,
       candidates: Seq[String], rewritten: DataFrame,
-      partCols: Seq[String], read: GraftConflicts.RewriteReadState,
-      serializable: Boolean = false): Long = {
+      partCols: Seq[String], read: GraftConflicts.RewriteReadState): Long = {
     val tmp = s"$table/_rewrite-${java.util.UUID.randomUUID()}"
     try {
       // write the rewritten rows to an invisible scratch graft table
@@ -392,7 +372,8 @@ object GraftMaintenance {
         .subsetOf(entries.map(_.file).toSet),
         s"graft rewrite: scratch manifest under $tmp is missing entries")
       GraftConflicts.withRewriteLock(table) {
-        GraftConflicts.validateRewrite(table, read, candidates, serializable)
+        GraftConflicts.validateRewrite(table, read, candidates,
+          serializable = false)
         GraftSwap.commit(table, java.util.UUID.randomUUID().toString,
           new Path(tmp), rels, entries, archive = candidates)
       }
@@ -406,56 +387,70 @@ object GraftMaintenance {
     }
   }
 
-  /** ROW-LEVEL DELETE with zone-map-selective rewrite: only the files
-    * whose statistics could not REFUTE the predicate are read and
-    * rewritten (`plannedFiles` — the same refutation engine the scan
-    * uses); a range-clustered or partitioned table deletes a key range
-    * by rewriting ~the files that hold it, not the table. SQL DELETE
-    * semantics: rows where the predicate is TRUE go; FALSE and NULL
-    * stay. `condition` must be built from unbound `col("name")`
-    * references — it is re-evaluated against a direct read of the
-    * candidate files, not against any caller-held DataFrame. Returns
-    * the new head version (or the current one when no file could
-    * match — a provable no-op). */
-  def delete(spark: SparkSession, table: String, condition: Column): Long = {
-    val read = GraftConflicts.captureRead(table)
-    val df = connectorRead(spark, table)
-    val candidates = plannedFiles(df.filter(condition))
-    if (candidates.isEmpty)
-      return GraftTableLog.latestVersion(table).getOrElse(0L)
-    val partCols = GraftCatalog.effectivePartCols(table, df.schema)
-    val keep = readCandidates(spark, table, df.schema, candidates,
-      GraftDeletes.livePositions(table))
-      .filter(not(coalesce(condition, lit(false))))
-    rewriteCommit(spark, table, candidates, keep, partCols, read)
+  /** Run a row-level command built over the table's own relation
+    * (`DeleteFromTable` / `UpdateTable` / `MergeIntoTable`) through
+    * Spark's DSv2 rewrite — the plan SQL `DELETE` / `UPDATE` /
+    * `MERGE INTO` take: [[GraftRowLevelOperation]] (copy-on-write: its
+    * scan prunes the candidate files by the condition's zone maps, its
+    * commit validates the read and swaps them) or, under
+    * `spark.graft.rowLevelMode = merge-on-read`,
+    * [[GraftDeltaOperation]]. Spark wraps a commit's refusal in its
+    * job-abort error; the retryable [[GraftConcurrentWriteException]]
+    * is re-thrown as itself. Returns the head version after the
+    * command (the current one when zone maps refuted every file — a
+    * no-op that commits nothing). */
+  private def runRowLevel(spark: SparkSession, table: String,
+      plan: LogicalPlan): Long = {
+    try Bridge.ofRows(spark, plan)
+    catch {
+      case e: Throwable => throw Iterator.iterate(e)(_.getCause)
+        .takeWhile(_ != null)
+        .collectFirst { case c: GraftConcurrentWriteException => c }
+        .getOrElse(e)
+    }
+    GraftTableLog.latestVersion(table).getOrElse(0L)
   }
 
-  /** ROW-LEVEL UPDATE with zone-map-selective rewrite: only the files
-    * whose statistics could not refute `condition` are read and
-    * rewritten (the [[delete]] candidate engine); every other file is
-    * carried into the new version untouched, so an update touching one
-    * key range of a clustered 100 TB table rewrites that range's
-    * files, not the table. SQL UPDATE semantics: assignments apply
-    * where the predicate is TRUE; FALSE and NULL rows keep their
-    * values. Assignments may read any PRE-update column (they all
-    * evaluate against the input row) and cast to the target column's
-    * declared type, so the table schema never drifts. SET targets
-    * resolve against the schema with the session's
-    * `spark.sql.caseSensitive` setting (insensitive by default, like
-    * the analyzer); incompatible assignment types are refused UP FRONT,
-    * and a narrowing-but-castable assignment (e.g. string → bigint)
-    * carries an in-plan assertion so a value the cast cannot represent
-    * fails the job loudly instead of silently writing NULL (the
-    * non-ANSI-cast corruption path). `condition` and assignment values
-    * must be built from unbound `col("name")` references — they are
-    * re-evaluated against a direct read of the candidate files, not
-    * against any caller-held DataFrame. Returns the new head version
-    * (or the current one when no file could match — a provable
-    * no-op). */
+  /** ROW-LEVEL DELETE: SQL `DELETE FROM … WHERE condition` over the
+    * table ([[runRowLevel]]) — copy-on-write rewrites only the files
+    * whose zone maps could not REFUTE the predicate, so a
+    * range-clustered or partitioned table deletes a key range by
+    * rewriting ~the files that hold it, not the table. SQL DELETE
+    * semantics: rows where the predicate is TRUE go; FALSE and NULL
+    * stay. A literal-`true` condition is Spark's TRUNCATE
+    * ([[GraftParquetTable.truncateTable]]). `condition` must be built
+    * from unbound `col("name")` references — it is resolved against
+    * the table, not against any caller-held DataFrame. Returns the new
+    * head version (or the current one when no file could match). */
+  def delete(spark: SparkSession, table: String, condition: Column): Long = {
+    // resolved through an analyzed filter over the table's relation, so
+    // the command and its condition share attribute ids (an unresolved
+    // `Column` in a hand-built command would reach codegen unresolved)
+    val Filter(cond, relation) = connectorRead(spark, table)
+      .filter(condition).queryExecution.analyzed
+    runRowLevel(spark, table, DeleteFromTable(relation, cond))
+  }
+
+  /** ROW-LEVEL UPDATE: SQL `UPDATE … SET … WHERE condition` over the
+    * table ([[runRowLevel]]) — copy-on-write rewrites only the files
+    * whose zone maps could not refute `condition`; every other file is
+    * carried into the new version untouched. SQL UPDATE semantics:
+    * assignments apply where the predicate is TRUE; FALSE and NULL
+    * rows keep their values. Assignments may read any PRE-update
+    * column and cast to the target column's declared type, so the
+    * table schema never drifts. SET targets resolve against the schema
+    * with the session's `spark.sql.caseSensitive` setting (insensitive
+    * by default, like the analyzer); incompatible assignment types are
+    * refused UP FRONT, and a narrowing-but-castable assignment (e.g.
+    * string → bigint) carries an in-plan assertion so a value the cast
+    * cannot represent fails the job loudly instead of silently writing
+    * NULL. CHECK constraints bind to the rewritten rows. `condition`
+    * and assignment values must be built from unbound `col("name")`
+    * references. Returns the new head version (or the current one
+    * when no file could match). */
   def update(spark: SparkSession, table: String, condition: Column,
       assignments: Map[String, Column]): Long = {
     require(assignments.nonEmpty, "graft update: no SET assignments")
-    val read = GraftConflicts.captureRead(table)
     val df = connectorRead(spark, table)
     val fields = df.schema.fields
     // resolve SET targets the way the analyzer would: case-insensitive
@@ -492,46 +487,43 @@ object GraftMaintenance {
           Some(name)
         }
       }.toSet
-    val candidates = plannedFiles(df.filter(condition))
-    if (candidates.isEmpty)
-      return GraftTableLog.latestVersion(table).getOrElse(0L)
-    val partCols = GraftCatalog.effectivePartCols(table, df.schema)
-    val hit = coalesce(condition, lit(false))
     import org.apache.spark.sql.functions.{assert_true, when}
-    val updated = readCandidates(spark, table, df.schema, candidates,
-      GraftDeletes.livePositions(table))
-      .select(fields.map { f =>
-        resolved.get(f.name) match {
-          case Some(v) =>
-            val cv = v.cast(f.dataType)
-            // guard the narrowing path: under the session's (default
-            // non-ANSI) cast, an unrepresentable value becomes NULL —
-            // assert a non-null input never casts to null, so the job
-            // fails loudly instead of corrupting every matched row
-            val guarded =
-              if (needGuard(f.name))
-                when(assert_true(v.isNull || cv.isNotNull,
-                  lit(s"graft update: assignment to ${f.name} produced " +
-                    s"NULL from a non-null value — the cast to " +
-                    s"${f.dataType.simpleString} cannot represent it"))
-                  .isNull, cv)
-              else cv
-            when(hit, guarded).otherwise(col(f.name)).as(f.name)
-          case None => col(f.name)
-        }
-      }.toSeq: _*)
-    rewriteCommit(spark, table, candidates, updated, partCols, read)
+    val values = resolved.toSeq.map { case (name, v) =>
+      val target = fields.find(_.name == name).get.dataType
+      val cv = v.cast(target)
+      // guard the narrowing path: under a non-ANSI cast an
+      // unrepresentable value becomes NULL — assert a non-null input
+      // never casts to null, so the job fails loudly instead of
+      // corrupting every matched row
+      (if (needGuard(name))
+        when(assert_true(v.isNull || cv.isNotNull,
+          lit(s"graft update: assignment to $name produced NULL from " +
+            s"a non-null value — the cast to ${target.simpleString} " +
+            "cannot represent it")).isNull, cv)
+      else cv).as(name)
+    }
+    val Project(list, Filter(cond, relation)) =
+      df.filter(condition).select(values: _*).queryExecution.analyzed
+    val set = list.map { case a: Alias =>
+      Assignment(relation.output.find(_.name == a.name).get, a.child)
+    }
+    runRowLevel(spark, table, UpdateTable(relation, set, Some(cond)))
   }
 
-  /** MERGE (upsert) with key-range-selective rewrite: source rows
-    * REPLACE same-key rows and INSERT otherwise (the
-    * [[graft.operators.Upsert]] semantics, committed into the table as
-    * a new version). Only files whose `keyCol` zone maps intersect the
-    * source's key range can hold a matching row — they rewrite; every
-    * other file is carried untouched, so a merge touching one day of a
-    * date-clustered 100 TB table rewrites that day's files, not the
-    * table. Source keys must be unique and non-null (ambiguous merges
-    * refuse loudly); source columns must cover the table schema.
+  /** MERGE (upsert): source rows REPLACE same-key rows and INSERT
+    * otherwise (the [[graft.operators.Upsert]] semantics, committed
+    * into the table as a new version) — SQL `MERGE INTO t USING s ON
+    * t.key = s.key AND t.key BETWEEN lo AND hi WHEN MATCHED THEN
+    * UPDATE SET * WHEN NOT MATCHED THEN INSERT *` ([[runRowLevel]]).
+    * `[lo, hi]` is the source's key range: Spark pushes that
+    * target-only conjunct to the row-level scan, so only files whose
+    * `keyCol` zone maps intersect it are read and rewritten — a merge
+    * touching one day of a date-clustered table rewrites that day's
+    * files, not the table. Source keys must be unique and non-null
+    * (ambiguous merges refuse loudly); source columns must cover the
+    * table schema. A copy-on-write commit validates SERIALIZABLY: the
+    * insert decisions read the whole table, so any concurrent commit
+    * refuses it (retryable).
     *
     * SCHEMA EVOLUTION: a source column the table lacks REFUSES by
     * default (the silent-drop alternative loses data the caller
@@ -616,42 +608,16 @@ object GraftMaintenance {
           .schema(widened).option("path", table).load()
       }
     val src = source.select(df.schema.fieldNames.map(col).toSeq: _*)
-    // the read snapshot the matched/not-matched decisions derive from
-    // — captured AFTER the schema carrier (our own commit must not
-    // self-conflict), BEFORE planning. MERGE validates SERIALIZABLE:
-    // its insert-vs-replace split read the whole table (zone maps +
-    // candidate rows), so ANY concurrent commit invalidates it.
-    val read = GraftConflicts.captureRead(table)
-    val cond = col(keyCol).between(lit(keyLo), lit(keyHi))
-    val candidates = plannedFiles(df.filter(cond))
-    val partCols = GraftCatalog.effectivePartCols(table, df.schema)
-    if (candidates.isEmpty) {
-      // provably no matching keys anywhere: a pure insert — one
-      // ordinary transactional append. The "no key anywhere" proof
-      // came from the read snapshot's zone maps, so it too must
-      // revalidate: a concurrent commit may have added the key. The
-      // lock is held across the append — a pure-insert merge racing a
-      // rewrite serializes; correctness over overlap on this path.
-      GraftConflicts.withRewriteLock(table) {
-        GraftConflicts.validateRewrite(table, read, Nil,
-          serializable = true)
-        val w = src.write.format("graft.sources.GraftParquetTableProvider")
-          .option("path", table).mode(org.apache.spark.sql.SaveMode.Append)
-        (if (partCols.nonEmpty)
-          w.option("partitionBy", partCols.mkString(","))
-        else w).save()
-      }
-      return GraftTableLog.latestVersion(table).getOrElse(
-        throw new IllegalStateException(
-          s"graft merge: append committed but no log version under $table"))
-    }
-    val candRows = readCandidates(spark, table, df.schema, candidates,
-      GraftDeletes.livePositions(table))
-    val survivors = candRows.join(
-      src.select(col(keyCol)).distinct(), Seq(keyCol), "left_anti")
-      .select(df.schema.fieldNames.map(col).toSeq: _*)
-    rewriteCommit(spark, table, candidates,
-      survivors.unionByName(src), partCols, read, serializable = true)
+    // the join resolves (and de-duplicates) both sides' attributes; the
+    // key range in the ON condition is what prunes the candidate files
+    val k = s"`${keyCol.replace("`", "``")}`"
+    val on = col(s"t.$k") === col(s"s.$k") &&
+      col(s"t.$k").between(lit(keyLo), lit(keyHi))
+    val Join(target, srcPlan, _, Some(cond), _) =
+      df.as("t").join(src.as("s"), on).queryExecution.analyzed
+    runRowLevel(spark, table, MergeIntoTable(target, srcPlan, cond,
+      Seq(UpdateStarAction(None)), Seq(InsertStarAction(None)), Nil,
+      withSchemaEvolution = false))
   }
 
   /** Fold MERGE-ON-READ deletes SELECTIVELY: rewrite only the files

@@ -123,7 +123,7 @@ class GraftParquetTable(path: String, tableSchema: StructType,
     // overwhelmingly common case) keeps every fast path untouched
     aliases: Map[String, Seq[String]] = Map.empty)
     extends Table with SupportsRead with SupportsWrite
-    with org.apache.spark.sql.connector.catalog.SupportsDelete
+    with org.apache.spark.sql.connector.catalog.TruncatableTable
     with org.apache.spark.sql.connector.catalog.SupportsMetadataColumns
     with org.apache.spark.sql.connector.catalog.SupportsRowLevelOperations {
   require(path != null, "graft parquet v2: 'path' option is required")
@@ -184,50 +184,51 @@ class GraftParquetTable(path: String, tableSchema: StructType,
   override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder =
     new GraftWriteBuilder(path, info, tablePartCols)
 
-  /** SQL `DELETE FROM … WHERE …` ([[org.apache.spark.sql.connector
-    * .catalog.SupportsDelete]]): delegates to the zone-map-selective
-    * rewrite ([[GraftMaintenance.delete]] — only files the predicate
-    * could touch are read and rewritten; commits a new log version).
-    * Accepted only when every filter converts faithfully to a Column
-    * — Spark then errors on the rest instead of us guessing. */
-  override def canDeleteWhere(filters: Array[Filter]): Boolean =
-    pinnedTravel.isEmpty && !GraftParquetTable.mergeOnRead &&
-      filters.forall(GraftFilterToColumn.convert(_).isDefined)
-
-  override def deleteWhere(filters: Array[Filter]): Unit = {
-    require(pinnedTravel.isEmpty,
-      "graft parquet v2: DELETE on a time-travel-pinned table")
-    // WAP guard — same contract as newRowLevelOperationBuilder: a
-    // metadata-only DELETE (or TRUNCATE, which routes here) mutates
-    // MAIN; refuse while the session's branch knob is set
+  /** Refuse a mutation of MAIN while the WAP session knob points at a
+    * branch: row-level operations and TRUNCATE bypass the
+    * branch-routing append builder, so they would silently mutate the
+    * wrong lineage (branches are append-only). */
+  private def requireMainLineage(what: String): Unit =
     require(org.apache.spark.sql.SparkSession.getActiveSession
         .flatMap(_.conf.getOption("spark.graft.branch"))
         .forall(_.trim.isEmpty),
-      "graft parquet v2: DELETE/TRUNCATE while spark.graft.branch is " +
-        "set would mutate MAIN, not the branch — branches are " +
-        "append-only; unset the conf first")
-    val spark = org.apache.spark.sql.SparkSession.active
-    val converted = filters.map(f => GraftFilterToColumn.convert(f)
-      .getOrElse(throw new UnsupportedOperationException(
-        // canDeleteWhere refuses these — reaching here means a caller
-        // bypassed it; dropping the conjunct would WIDEN the delete
-        s"graft parquet v2 delete: unconvertible filter $f")))
-    val cond = converted.reduceOption(_ && _)
-      .getOrElse(org.apache.spark.sql.functions.lit(true))
-    GraftMaintenance.delete(spark, path, cond)
-  }
+      s"graft parquet v2: $what while spark.graft.branch is set would " +
+        "mutate MAIN, not the branch — branches are append-only; unset " +
+        "the conf first")
 
-  /** SQL `TRUNCATE TABLE`: delete-all as one rewrite commit — the old
-    * generation archives, the empty head is a new version (time travel
-    * to the pre-truncate version still answers until vacuum). */
+  /** SQL `TRUNCATE TABLE` and a `DELETE` whose condition is literally
+    * true (Spark routes both here instead of planning a row-level
+    * rewrite): one [[GraftSwap]] that archives every live file, under
+    * the rewrite lock after validating the read — the old generation
+    * stays time-travel-readable until vacuum, the empty head is a new
+    * version. It must not plan a DELETE: Spark would send it straight
+    * back here. */
   override def truncateTable(): Boolean = {
-    deleteWhere(Array[Filter](org.apache.spark.sql.sources.AlwaysTrue))
+    require(pinnedTravel.isEmpty,
+      "graft parquet v2: TRUNCATE on a time-travel-pinned table")
+    requireMainLineage("TRUNCATE")
+    val read = GraftConflicts.captureRead(path)
+    GraftConflicts.withRewriteLock(path) {
+      // listed under the lock: no rewrite is mid-swap, so every live
+      // file is seen
+      val live = try GraftParquetV2.listFiles(path) catch {
+        case _: java.io.FileNotFoundException => Nil
+      }
+      if (live.nonEmpty) {
+        GraftConflicts.validateRewrite(path, read, live,
+          serializable = false)
+        val writeId = java.util.UUID.randomUUID().toString
+        GraftSwap.commit(path, writeId,
+          new org.apache.hadoop.fs.Path(path, s"_staging-$writeId"),
+          Nil, Nil, archive = live)
+      }
+    }
     true
   }
 
-  /** SQL `UPDATE` / `MERGE INTO` (and `DELETE` whose predicate the
-    * metadata path can't take): group-based COPY-ON-WRITE row-level
-    * operations ([[org.apache.spark.sql.connector.catalog
+  /** SQL `UPDATE` / `MERGE INTO` / `DELETE` and the
+    * [[GraftMaintenance]] delete / update / merge: group-based
+    * COPY-ON-WRITE row-level operations ([[org.apache.spark.sql.connector.catalog
     * .SupportsRowLevelOperations]] — the Iceberg shape). Spark's
     * `RewriteUpdateTable`/`RewriteMergeIntoTable` plan a ReplaceData
     * job over the operation's scan; the scan prunes to the files whose
@@ -235,25 +236,15 @@ class GraftParquetTable(path: String, tableSchema: StructType,
     * granularity — candidate files' non-matching rows are read and
     * written back untouched), and the write's commit swaps exactly
     * those files for the rewritten ones as a new log version
-    * ([[GraftRowLevelOperation]]). Simple DELETEs stay on the
-    * metadata-only [[deleteWhere]] path via Spark's
-    * OptimizeMetadataOnlyDeleteFromTable. */
+    * ([[GraftRowLevelOperation]]); under merge-on-read,
+    * [[GraftDeltaOperation]]. */
   override def newRowLevelOperationBuilder(
       info: org.apache.spark.sql.connector.write.RowLevelOperationInfo)
       : org.apache.spark.sql.connector.write.RowLevelOperationBuilder = {
     require(pinnedTravel.isEmpty,
       "graft parquet v2: row-level " + info.command() +
         " on a time-travel-pinned table")
-    // WAP guard: row-level operations mutate MAIN (they bypass the
-    // branch-routing append builder), so running one while the WAP
-    // session knob points at a branch would silently mutate the wrong
-    // lineage — refuse loudly instead (branches are append-only)
-    require(org.apache.spark.sql.SparkSession.getActiveSession
-        .flatMap(_.conf.getOption("spark.graft.branch"))
-        .forall(_.trim.isEmpty),
-      "graft parquet v2: row-level " + info.command() + " while " +
-        "spark.graft.branch is set would mutate MAIN, not the branch " +
-        "— branches are append-only; unset the conf first")
+    requireMainLineage(s"row-level ${info.command()}")
     if (GraftParquetTable.mergeOnRead)
       () => new GraftDeltaOperation(path, tableSchema, info.command(),
         aliases)
@@ -285,36 +276,6 @@ object GraftParquetTable {
         s"graft parquet v2: $ModeConf must be copy-on-write or " +
           s"merge-on-read, got '$other'")
     }
-}
-
-/** Faithful v1-Filter → Column bridge for the SQL DELETE path — only
-  * shapes with exact Column equivalents convert; anything else makes
-  * [[GraftParquetTable.canDeleteWhere]] refuse, and Spark reports the
-  * unsupported DELETE instead of a silent semantic drift. */
-private[sources] object GraftFilterToColumn {
-  import org.apache.spark.sql.Column
-  import org.apache.spark.sql.functions.{col, lit}
-
-  def convert(f: Filter): Option[Column] = f match {
-    case EqualTo(a, v) => Some(col(a) === lit(v))
-    case EqualNullSafe(a, v) => Some(col(a) <=> lit(v))
-    case GreaterThan(a, v) => Some(col(a) > lit(v))
-    case GreaterThanOrEqual(a, v) => Some(col(a) >= lit(v))
-    case LessThan(a, v) => Some(col(a) < lit(v))
-    case LessThanOrEqual(a, v) => Some(col(a) <= lit(v))
-    case In(a, vs) => Some(col(a).isin(vs.toSeq: _*))
-    case IsNull(a) => Some(col(a).isNull)
-    case IsNotNull(a) => Some(col(a).isNotNull)
-    case And(l, r) => for (lc <- convert(l); rc <- convert(r)) yield lc && rc
-    case Or(l, r) => for (lc <- convert(l); rc <- convert(r)) yield lc || rc
-    case Not(c) => convert(c).map(!_)
-    case StringStartsWith(a, v) => Some(col(a).startsWith(v))
-    case StringEndsWith(a, v) => Some(col(a).endsWith(v))
-    case StringContains(a, v) => Some(col(a).contains(v))
-    case _: AlwaysTrue => Some(lit(true))
-    case _: AlwaysFalse => Some(lit(false))
-    case _ => None
-  }
 }
 
 /** A versioned read target ([[GraftTableLog]]): either a pinned

@@ -11,8 +11,10 @@ import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
 /** Group-based COPY-ON-WRITE row-level operation for graft tables — the
-  * machinery behind SQL `UPDATE`, `MERGE INTO`, and non-metadata
-  * `DELETE` ([[GraftParquetTable.newRowLevelOperationBuilder]]).
+  * machinery behind SQL `UPDATE`, `MERGE INTO` and `DELETE`, and the
+  * Scala API's [[GraftMaintenance.delete]] / `update` / `merge`, which
+  * build the same commands
+  * ([[GraftParquetTable.newRowLevelOperationBuilder]]).
   *
   * Spark's rewrite rules (`RewriteUpdateTable` et al.) turn the command
   * into a ReplaceData job: read the affected GROUPS (files, here),
@@ -42,10 +44,9 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   *     out, candidates un-archived). A stale read refuses with a
   *     retryable [[GraftConcurrentWriteException]], table untouched.
   *
-  * 100 TB posture: identical to [[GraftMaintenance.update]] — an
-  * UPDATE touching one key range of a clustered table rewrites that
-  * range's files; everything else carries into the new version by
-  * reference. Reference context: the reference has no mutation story
+  * 100 TB posture: an UPDATE touching one key range of a clustered
+  * table rewrites that range's files; everything else carries into the
+  * new version by reference. Reference context: the reference has no mutation story
   * at all (BigQuery tables are re-read wholesale each run,
   * `/root/reference/pipelines/total_distance.py:92-95`); row-level SQL
   * mutation with selective rewrite is what a lakehouse user expects in

@@ -206,10 +206,8 @@ object GraftTableLog {
     // fresh torn head either — they claim past it.) The horizon must
     // comfortably exceed the slowest plausible snapshot write — it is
     // manifest-scale metadata, but a congested object store can be
-    // slow; tune via -Dgraft.log.healHorizonMs for such deployments.
-    val horizonMs =
-      sys.props.get("graft.log.healHorizonMs").map(_.toLong)
-        .getOrElse(600000L) // 10 min
+    // slow — 10 min covers it
+    val horizonMs = 600000L
     // the unreadable file can VANISH between the exists() above and
     // this stat — a crashed cross-JVM writer's own error handler
     // deletes its partial snapshot. A vanished file means the number
@@ -493,19 +491,17 @@ object GraftTableLog {
           // the PRIOR committed seq (the claim has not happened yet).
           // An aged torn claim is a crashed writer: heal it so the seq
           // number frees up. Ref bodies are ~20 bytes — the horizon is
-          // its own, much shorter knob (default 5 s) rather than the
-          // snapshot heal horizon: a torn ref blocks EVERY writer's
-          // CAS at seq+1, and no plausible in-flight 20-byte write
-          // takes longer than seconds.
+          // its own, much shorter one (5 s) rather than the snapshot
+          // heal horizon: a torn ref blocks EVERY writer's CAS at
+          // seq+1, and no plausible in-flight 20-byte write takes
+          // longer than seconds.
           Thread.sleep(50L)
           bodyOf(seq).flatMap(parse) match {
             case Some((h, b)) =>
               return if (tombstoned((h, b))) None else Some((seq, h, b))
             case None =>
               val p = branchSeqPath(table, name, seq)
-              val horizonMs =
-                sys.props.get("graft.log.refHealHorizonMs").map(_.toLong)
-                  .getOrElse(5000L)
+              val horizonMs = 5000L
               val aged = (try Some(fs.getFileStatus(p)) catch {
                 case _: java.io.FileNotFoundException => None
               }).forall(st => System.currentTimeMillis() -

@@ -105,9 +105,10 @@ class GraftCatalogSpec extends SparkSpec {
   }
 
   test("SQL DELETE with an arithmetic predicate: the copy-on-write fallback") {
-    // a predicate the v1-filter bridge can't carry (doc_id % 3) can't
-    // take the metadata-only path — it falls through to the group-based
-    // copy-on-write rewrite (SupportsRowLevelOperations) and WORKS
+    // every SQL DELETE plans Spark's group-based copy-on-write rewrite
+    // (SupportsRowLevelOperations); an arithmetic predicate (doc_id % 3)
+    // prunes no file by zone maps, so every file is a candidate, and
+    // the rewrite re-applies it per row
     write("t8", 0, "append")
     write("t8", 1, "append")
     val both = docs.filter(pmod(col("doc_id"), lit(3)) < 2)

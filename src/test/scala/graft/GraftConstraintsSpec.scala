@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.sources.{GraftConstraints, GraftParquetTable}
+import graft.sources.{GraftConstraints, GraftMaintenance, GraftParquetTable, GraftTableLog}
 
 /** Writer-enforced CHECK constraints ([[graft.sources.GraftConstraints]]):
   * add validates the backlog, every write route refuses violating rows
@@ -89,6 +89,21 @@ class GraftConstraintsSpec extends SparkSpec {
     assert((e.getMessage + Option(e.getCause).map(_.getMessage)
       .getOrElse("")).contains("lang_known"))
     spark.sql(s"UPDATE $cat.corp.c3 SET lang = 'de' WHERE doc_id = 0")
+    assert(read(p).filter(col("doc_id") === 0).head().getString(1) == "de")
+    // the Scala API's UPDATE and a MERGE replacing a MATCHED row bind
+    // the same constraints: refused by name, no version committed
+    def refusedByName(op: => Unit): Unit = {
+      val head = GraftTableLog.latestVersion(p)
+      val e = intercept[Exception](op)
+      assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .exists(c => String.valueOf(c.getMessage).contains("lang_known")), e)
+      assert(GraftTableLog.latestVersion(p) == head)
+    }
+    refusedByName(GraftMaintenance.update(spark, p, col("doc_id") === 0,
+      Map("lang" -> lit("xx"))))
+    refusedByName(GraftMaintenance.merge(spark, p,
+      read(p).filter(col("doc_id") === 0).withColumn("lang", lit("xx")),
+      "doc_id"))
     assert(read(p).filter(col("doc_id") === 0).head().getString(1) == "de")
     // MOR update images are enforced too
     spark.conf.set(GraftParquetTable.ModeConf, "merge-on-read")

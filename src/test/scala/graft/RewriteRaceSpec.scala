@@ -35,11 +35,13 @@ class RewriteRaceSpec extends SparkSpec {
     info(line)
   }
 
-  /** Runs a SQL row-level `stmt` whose `gate(...)` calls block until
+  /** Runs a row-level `op` whose `gate(...)` calls block until
     * `concurrent` has committed, then expects the retryable refusal
-    * and the table exactly as `concurrent` left it. */
-  private def staleSqlRefuses(stmt: String, path: String)(
-      concurrent: => Unit): Unit = {
+    * and the table exactly as `concurrent` left it. SQL statements
+    * surface the refusal inside Spark's job-abort error; the Scala API
+    * (`scalaApi = true`) must throw the conflict itself. */
+  private def staleRefuses(path: String, scalaApi: Boolean = false)(
+      op: => Unit)(concurrent: => Unit): Unit = {
     val fmt = "graft.sources.GraftParquetTableProvider"
     def rows = spark.read.format(fmt).option("path", path).load()
       .collect().map(_.toSeq).sortBy(_.mkString(",")).toSeq
@@ -47,7 +49,7 @@ class RewriteRaceSpec extends SparkSpec {
     val go = new java.util.concurrent.CountDownLatch(1)
     SqlGate.armed = Some((started, go))
     import scala.concurrent.ExecutionContext.Implicits.global
-    val run = scala.concurrent.Future(spark.sql(stmt))
+    val run = scala.concurrent.Future(op)
     try {
       assert(started.await(120, java.util.concurrent.TimeUnit.SECONDS),
         "the statement never reached its gate")
@@ -56,12 +58,14 @@ class RewriteRaceSpec extends SparkSpec {
     val after = (graft.sources.GraftTableLog.latestVersion(path), rows)
     val e = intercept[Throwable](scala.concurrent.Await.result(run,
       scala.concurrent.duration.Duration(180, "s")))
-    assert(Iterator.iterate(e)(_.getCause).takeWhile(_ != null)
+    if (scalaApi)
+      assert(e.isInstanceOf[graft.sources.GraftConcurrentWriteException], e)
+    else assert(Iterator.iterate(e)(_.getCause).takeWhile(_ != null)
       .exists(_.isInstanceOf[graft.sources.GraftConcurrentWriteException]), e)
     SqlGate.armed = None
     assert((graft.sources.GraftTableLog.latestVersion(path), rows) == after,
       "a refused row-level commit must leave the table untouched")
-    spark.sql(stmt) // the retry re-plans at the new head and commits
+    op // the retry re-plans at the new head and commits
     assert(graft.sources.GraftTableLog.latestVersion(path) ==
       after._1.map(_ + 1))
   }
@@ -79,21 +83,35 @@ class RewriteRaceSpec extends SparkSpec {
         .write.format(fmt).option("path", path).mode("append").save()
       path
     }
+    def append(path: String): Unit =
+      spark.range(100, 103).selectExpr("id AS k", "id AS v").write
+        .format(fmt).option("path", path).mode("append").save()
     // MERGE is serializable: a concurrent append invalidates its read
     val m = seed("m")
     spark.range(0, 3).selectExpr("gate(id) AS k", "-1L AS v")
       .createOrReplaceTempView("stale_src")
-    staleSqlRefuses("""MERGE INTO stale_cat.ns.m t USING stale_src s
-                      |ON t.k = s.k WHEN MATCHED THEN UPDATE SET *
-                      |WHEN NOT MATCHED THEN INSERT *""".stripMargin, m) {
-      spark.range(100, 103).selectExpr("id AS k", "id AS v").write
-        .format(fmt).option("path", m).mode("append").save()
-    }
+    staleRefuses(m)(spark.sql(
+      """MERGE INTO stale_cat.ns.m t USING stale_src s
+        |ON t.k = s.k WHEN MATCHED THEN UPDATE SET *
+        |WHEN NOT MATCHED THEN INSERT *""".stripMargin))(append(m))
+    // the Scala API's MERGE: the gate sits on the payload column, which
+    // its source-key audit prunes, so only the merge job itself blocks
+    val sm = seed("sm")
+    staleRefuses(sm, scalaApi = true)(graft.sources.GraftMaintenance.merge(
+      spark, sm, spark.range(0, 3).selectExpr("id AS k",
+        "gate(id) - id - 1 AS v"), "k"))(append(sm))
     // UPDATE commutes with appends; a compaction archiving its
     // candidate file after the read is what invalidates it
     val u = seed("u")
-    staleSqlRefuses("UPDATE stale_cat.ns.u SET v = gate(v) WHERE k < 5", u) {
+    staleRefuses(u)(spark.sql(
+      "UPDATE stale_cat.ns.u SET v = gate(v) WHERE k < 5")) {
       graft.sources.GraftMaintenance.compact(spark, u)
+    }
+    val su = seed("su")
+    staleRefuses(su, scalaApi = true)(graft.sources.GraftMaintenance.update(
+      spark, su, org.apache.spark.sql.functions.col("k") < 5,
+      Map("v" -> org.apache.spark.sql.functions.expr("gate(v)")))) {
+      graft.sources.GraftMaintenance.compact(spark, su)
     }
   }
 
