@@ -31,7 +31,9 @@ import org.apache.spark.sql.SparkSession
   *   - SELF-DEFENSE (r10): the T0 load gate cannot see contention that
   *     arrives MID-run, which poisoned the official snapshot in three of
   *     the first nine rounds. After the sweep, any query whose min
-  *     exceeds 1.5x its best across bench_history.jsonl is re-timed
+  *     exceeds 1.5x its best across bench_history.jsonl lines of the
+  *     same SF and `cpus` (the detail line records `cpus` and `nproc`)
+  *     is re-timed
   *     (load-gated between retries); the line reports `renoised` (how
   *     many were retried) and `still_slow` (the ones still over the bar
   *     after retry — a genuine regression signal, not contention).
@@ -200,7 +202,11 @@ object Bench {
               // SPARK_GRAFT_BENCH_ONLY-filtered allTimes: a 3-query
               // diagnostic run must not re-admit every old-era line
               // (the phantom-best drift this gate exists to exclude)
+              // same-host rows only: a best timed at another thread
+              // count is a different machine's floor, not a regression
+              // bar (lines older than the `cpus` field never qualify)
               if (detail.path("sf").asText("") == sfDir &&
+                  detail.path("cpus").asText("") == cpus &&
                   lineSize >= (SparkEntry.queries.size * 8) / 10)
                 Some(detail)
               else None
@@ -366,9 +372,13 @@ object Bench {
           collection.mutable.Buffer.empty[Double])
         .map(l => math.rint(l * 100) / 100).mkString("[", ",", "]")
     }.mkString("{", ",", "}")
+    // the host the line was timed on: the thread count the session ran
+    // with and the cores the JVM saw
+    val host = s""""cpus":"$cpus","nproc":""" +
+      Runtime.getRuntime.availableProcessors()
     val detail =
       s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,""" +
-        s""""failed":${failed.mkString("[", ",", "]")},$tail,""" +
+        s""""failed":${failed.mkString("[", ",", "]")},$tail,$host,""" +
         s""""times":$rawTimes,"run_loads":$rawLoads}""" + "\n"
     java.nio.file.Files.writeString(
       java.nio.file.Paths.get("bench_result.json"), detail)

@@ -387,7 +387,7 @@ object Dedup {
     * distributed loop. Default 1M edges ≈ 16 MB of (long, long) plus
     * hash-map overhead in one task — comfortably single-machine work,
     * the same measured-count gating idiom as the graph loops' broadcast
-    * cap and the MV mergeDeleteCap. 0 forces the loop (specs exercising
+    * cap. 0 forces the loop (specs exercising
     * contraction behavior pin it). */
   private def localCcCap: Long =
     sys.props.get("graft.dedup.localCcCap").map(_.toLong)

@@ -399,7 +399,7 @@ object GraftMaintenance {
     * is re-thrown as itself. Returns the head version after the
     * command (the current one when zone maps refuted every file — a
     * no-op that commits nothing). */
-  private def runRowLevel(spark: SparkSession, table: String,
+  private[sources] def runRowLevel(spark: SparkSession, table: String,
       plan: LogicalPlan): Long = {
     try Bridge.ofRows(spark, plan)
     catch {
@@ -535,25 +535,7 @@ object GraftMaintenance {
     * merge proceeds under the widened schema, so merged/inserted rows
     * carry their values. The Delta `mergeSchema` convention. */
   def merge(spark: SparkSession, table: String, source: DataFrame,
-      keyCol: String, mergeSchema: Boolean = false): Long =
-    mergeImpl(spark, table, source, keyCol, mergeSchema, None)
-
-  /** [[merge]] with the source-key audit pass SKIPPED: `keyRange` is
-    * the caller-proven (lo, hi) of a NON-EMPTY source whose keys the
-    * caller already knows to be unique and non-null (GraftMv's state
-    * upserts: one row per group by construction, range from the same
-    * aggregate that sized the delta). The public [[merge]] keeps its
-    * audit — this exists so an internal caller that has ALREADY paid
-    * for the facts does not pay a second driver action per refresh to
-    * re-prove them (r16 optimization round). */
-  private[sources] def mergeTrustedKeys(spark: SparkSession, table: String,
-      source: DataFrame, keyCol: String, keyRange: (Any, Any)): Long =
-    mergeImpl(spark, table, source, keyCol, mergeSchema = false,
-      Some(keyRange))
-
-  private def mergeImpl(spark: SparkSession, table: String,
-      source: DataFrame, keyCol: String, mergeSchema: Boolean,
-      trustedKeyRange: Option[(Any, Any)]): Long = {
+      keyCol: String, mergeSchema: Boolean = false): Long = {
     val df0 = connectorRead(spark, table)
     require(df0.schema.fieldNames.toSet.subsetOf(
       source.schema.fieldNames.toSet),
@@ -578,21 +560,19 @@ object GraftMaintenance {
     require(extras.map(_.name.toLowerCase).distinct.length == extras.length,
       s"graft merge: case-duplicate new columns " +
         s"[${extras.map(_.name).mkString(", ")}]")
-    val (keyLo, keyHi) = trustedKeyRange.getOrElse {
-      val keyStats = source.agg(
-        org.apache.spark.sql.functions.count(lit(1)).as("n"),
-        org.apache.spark.sql.functions.count(col(keyCol)).as("nk"),
-        org.apache.spark.sql.functions
-          .countDistinct(col(keyCol)).as("nd"),
-        min(col(keyCol)).as("lo"), max(col(keyCol)).as("hi")).head()
-      require(keyStats.getLong(0) == keyStats.getLong(1),
-        s"graft merge: null merge keys in the source")
-      require(keyStats.getLong(1) == keyStats.getLong(2),
-        s"graft merge: duplicate source keys — ambiguous merge refused")
-      if (keyStats.getLong(0) == 0L)
-        return GraftTableLog.latestVersion(table).getOrElse(0L)
-      (keyStats.get(3), keyStats.get(4))
-    }
+    val keyStats = source.agg(
+      org.apache.spark.sql.functions.count(lit(1)).as("n"),
+      org.apache.spark.sql.functions.count(col(keyCol)).as("nk"),
+      org.apache.spark.sql.functions
+        .countDistinct(col(keyCol)).as("nd"),
+      min(col(keyCol)).as("lo"), max(col(keyCol)).as("hi")).head()
+    require(keyStats.getLong(0) == keyStats.getLong(1),
+      s"graft merge: null merge keys in the source")
+    require(keyStats.getLong(1) == keyStats.getLong(2),
+      s"graft merge: duplicate source keys — ambiguous merge refused")
+    if (keyStats.getLong(0) == 0L)
+      return GraftTableLog.latestVersion(table).getOrElse(0L)
+    val (keyLo, keyHi) = (keyStats.get(3), keyStats.get(4))
     val df =
       if (extras.isEmpty) df0
       else {
@@ -662,9 +642,15 @@ object GraftMaintenance {
     * preserved, so a table legitimately holding identical rows diffs
     * correctly). A compaction that only repacks rows therefore yields
     * an EMPTY feed — the correct answer, and the measured one
-    * (spec-asserted). */
+    * (spec-asserted).
+    *
+    * The images take `schema` when given (a caller that already
+    * resolved the table, like [[GraftMv.refresh]], saves the head
+    * listing), else the head's schema. */
   def changeFeedRows(spark: SparkSession, table: String, since: Long,
-      until: Long): DataFrame = {
+      until: Long,
+      schema: Option[org.apache.spark.sql.types.StructType] = None)
+      : DataFrame = {
     require(since <= until,
       s"graft change feed: cdc since $since > until $until")
     // since = 0 is the empty pre-table snapshot (versions start at 1):
@@ -698,10 +684,10 @@ object GraftMaintenance {
       toRels.filterNot(fromSet) ++ dvChanged)
     val removed = GraftTableLog.resolveAll(table,
       fromRels.filterNot(toSet) ++ dvChanged)
-    val schema = connectorRead(spark, table).schema
+    val sch = schema.getOrElse(connectorRead(spark, table).schema)
     val al = GraftCatalog.readAliases(table, conf)
-    val a = readFilesWithDeletes(spark, schema, added, dvTo, al)
-    val r = readFilesWithDeletes(spark, schema, removed, dvFrom, al)
+    val a = readFilesWithDeletes(spark, sch, added, dvTo, al)
+    val r = readFilesWithDeletes(spark, sch, removed, dvFrom, al)
     // The file sets are known DRIVER-SIDE, so the one-sided spans skip
     // the multiset diff entirely (r16 optimization round): a span that
     // only ADDED files (pure appends — every ingest commit, and the

@@ -49,21 +49,24 @@ final case class MvAgg(func: String, col: String, alias: String)
   * number (the same optimistic CAS as the table log's version claim —
   * `GraftTableLog.scala:127`). A refresh (a) reads the latest state,
   * (b) reads the MV AS OF the version that state names — never the raw
-  * head — (c) folds the delta, overwrites the MV data, and only then
-  * (d) claims the next state seq. A crash anywhere before (d) leaves an
-  * orphaned MV version that NO reader ever serves ([[read]] pins
-  * `versionAsOf` to the recorded state), and the next refresh redoes
-  * the same delta idempotently from the durable watermark. Two
-  * concurrent refreshers both commit data (the writer path serializes
-  * physically on the table's rewrite lock) but exactly ONE wins the
-  * state CAS; the loser's data version is orphaned-by-construction and
-  * the loser returns the winner's state. No MV-level lock exists to
-  * leak or age out.
+  * head — (c) folds the delta into the MV data as ONE commit (an
+  * overwrite, or in merge mode one `MERGE INTO` that also deletes
+  * vanished groups), and only then (d) claims the next state seq. A
+  * crash anywhere before (d) leaves an orphaned MV version that NO
+  * reader ever serves ([[read]] pins `versionAsOf` to the recorded
+  * state), and the next refresh redoes the same delta idempotently
+  * from the durable watermark. Two concurrent refreshers both commit
+  * data (the writer path serializes physically on the table's rewrite
+  * lock) but exactly ONE wins the state CAS; the loser's data version
+  * is orphaned-by-construction and the loser returns the winner's
+  * state. No MV-level lock exists to leak or age out.
   *
   * Scale notes: the state table is |groups|-sized, so the per-refresh
-  * overwrite is group-cardinality work, not source-table work; the
-  * delta aggregation shuffles one row per (changed row's group), and
-  * the recompute semi-join broadcasts the (small) affected-key set.
+  * overwrite is group-cardinality work, not source-table work (merge
+  * mode: touched-group work, the MERGE's key range pruning the state
+  * files it rewrites); the delta aggregation shuffles one row per
+  * (changed row's group), and the recompute semi-join broadcasts the
+  * (small) affected-key set.
   * Reference context: the reference re-reads whole tables per run
   * (`/root/reference/pipelines/total_distance.py:92-95`); this is the
   * standing-aggregate replacement.
@@ -73,14 +76,10 @@ object GraftMv {
   private val MvDir = "_graft_mv"
   private val RowsCol = "_mv_rows"
   private val KeyCol = "_mv_key"
+  // the merge-mode MERGE source's row kind (see mergeState)
+  private val OpCol = "_mv_op"
   private def conf = GraftParquetWrite.sessionConf()
   private val fmt = "graft.sources.GraftParquetTableProvider"
-
-  /** How many vanished groups a merge-mode refresh will DELETE by key
-    * list before falling back to a full state overwrite (the key list
-    * is driver-collected). */
-  private def mergeDeleteCap: Int =
-    sys.props.get("graft.mv.mergeDeleteCap").map(_.toInt).getOrElse(10000)
 
   private def defPath(mv: String) = new Path(new Path(mv, MvDir), "def")
   private def statePath(mv: String, seq: Long) =
@@ -317,8 +316,8 @@ object GraftMv {
       }
     }
 
-  /** Deterministic single-column group key for merge-mode state
-    * upserts ([[GraftMaintenance.merge]] keys on ONE column): each
+  /** Deterministic single-column group key for the merge-mode state
+    * MERGE ([[mergeState]] matches on ONE column): each
     * group value length-prefixed — unambiguous for any content, no
     * separator byte to collide with — with an explicit NULL marker. */
   private def keyExpr(groupCols: Seq[String]): Column =
@@ -329,7 +328,7 @@ object GraftMv {
     }: _*)
 
   /** Merge-mode state lays out RANGE-CLUSTERED on the key so later
-    * upserts' zone-map candidate selection prunes to the touched files
+    * MERGEs' zone-map candidate selection prunes to the touched files
     * — unsorted state would make every file a merge candidate. File
     * count follows AQE's byte-sized shuffle targets (grows with state;
     * a tiny state correctly collapses to one file) unless
@@ -359,13 +358,13 @@ object GraftMv {
     *
     * `stateMerge = true` switches refresh to MERGE-mode state updates:
     * instead of overwriting the |groups|-sized state table per refresh,
-    * touched groups upsert by a synthetic length-prefixed key column
-    * and vanished groups delete by key — state-write cost ∝ TOUCHED
-    * groups, the high-cardinality-MV regime (a 100M-group state must
-    * not rewrite per refresh). Requires head == recorded version at
+    * ONE `MERGE INTO` keyed by a synthetic length-prefixed key column
+    * folds, inserts and deletes the touched groups — state-write cost ∝
+    * TOUCHED groups, the high-cardinality-MV regime (a 100M-group state
+    * must not rewrite per refresh), and one MV version per refresh
+    * however many groups vanish. Requires head == recorded version at
     * entry (any crashed refresh's orphan commit heals via one full
-    * overwrite first); falls back to overwrite when the vanished-key
-    * list exceeds `graft.mv.mergeDeleteCap`. */
+    * overwrite first). */
   def create(spark: SparkSession, mv: String, src: String,
       groupCols: Seq[String], aggs: Seq[MvAgg],
       stateMerge: Boolean = false): Long = {
@@ -397,10 +396,10 @@ object GraftMv {
     }
     val aliases = aggs.map(_.alias)
     require(aliases.distinct == aliases &&
-        aliases.forall(a => !groupCols.contains(a) && a != RowsCol &&
-          a != KeyCol && !a.contains("__")),
+        aliases.forall(a => !groupCols.contains(a) &&
+          !a.startsWith("_mv_") && !a.contains("__")),
       "graft mv: aliases must be unique, distinct from group columns, " +
-        s"not '$RowsCol'/'$KeyCol', and free of '__' (reserved)")
+        "and free of the '_mv_' prefix and '__' (reserved)")
     writeDef(mv, src, groupCols, aggs, stateMerge)
     healToState(spark, mv, src, groupCols, aggs, srcV, stateMerge)
   }
@@ -426,233 +425,250 @@ object GraftMv {
     mvV
   }
 
+  /** Run `body` with the session's job description set to `what`, then
+    * restore the caller's — the refresh's jobs show up by name in the
+    * Spark UI and listeners. */
+  private def described[T](spark: SparkSession, what: String)(body: => T): T = {
+    val sc = spark.sparkContext
+    val prev = sc.getLocalProperty("spark.job.description")
+    sc.setJobDescription(what)
+    try body finally sc.setLocalProperty("spark.job.description", prev)
+  }
+
   /** Fold source changes since the last refresh into the view. Returns
     * the MV version now holding the current state (unchanged when the
     * source head equals the watermark). Safe to call concurrently and
     * to re-run after any crash — see the class doc's commit protocol. */
   def refresh(spark: SparkSession, mv: String): Long = {
     val (src, groupCols, aggs, stateMerge) = readDef(mv)
+    // every version and the source schema resolve ONCE here and are
+    // passed down: each re-resolution is another log listing
     val srcHead = GraftTableLog.latestVersion(src).getOrElse(
       throw new IllegalStateException(
         s"graft mv: source $src of $mv has lost its version log"))
-    val st = latestState(mv) match {
+    val (seq, srcV0, mvV0) = latestState(mv) match {
       case None =>
         // creation crashed between definition and first state record
         return healToState(spark, mv, src, groupCols, aggs, srcHead,
           stateMerge)
       case Some(s) => s
     }
-    val (seq, srcV0, mvV0) = st
     if (srcHead == srcV0) return mvV0
     require(srcHead > srcV0,
       s"graft mv: source $src head $srcHead is BEHIND the processed " +
         s"watermark $srcV0 — the source was rolled back or vacuumed; " +
         "drop and re-create the view")
-    val delta = GraftMaintenance.changeFeedRows(spark, src, srcV0, srcHead)
-    val schema = spark.read.format(fmt).option("path", src).load().schema
-    val das = deltaAggs(schema, aggs)
-    // The delta AGGREGATE (touched-group-sized, ≪ the row-level feed) is
-    // PERSISTED in every mode (r16 optimization round): the refresh has
-    // up to four consumers of the feed — the emptiness check, the fold
-    // plan's write, the rebuild-key broadcast, merge-mode's vanished
-    // detection — and each used to re-run the change-feed multiset diff
-    // (two exceptAll shuffles over row images) from scratch; measured at
-    // sf0.1 that was 2 full feed executions per overwrite refresh and 3+
-    // in merge mode. Aggregating FIRST also means the one feed execution
-    // shuffles group-sized partials, not row images.
-    val d = delta.groupBy(groupCols.map(col): _*).agg(das.head, das.tail: _*)
-      .alias("d")
-    d.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-    // MERGE-MODE engine decision, made BEFORE the fold plan is built:
-    // the merge mutates the RAW head, so it is only sound when the
-    // head IS the recorded state (an orphaned crashed commit on top
-    // would make the base unknowable) — otherwise one healing
-    // overwrite. When merging, the state read is PRUNED to the touched
-    // key RANGE: the state lays out range-clustered on the key, so a
-    // band-shaped delta (the time-ordered ingest this mode targets)
-    // prunes to the hot band's files via zone maps. A scattered delta
-    // widens the range back to a full read — write cost stays
-    // touched-group-bounded either way, and rows outside the delta
-    // inside the range fold to untouched and are never written.
+    // the pinned source head: its schema types the feed and the fold,
+    // and the min/max/hll rebuild reads it
+    val base = spark.read.format(fmt).option("path", src)
+      .option("versionAsOf", srcHead.toString).load()
+    val schema = base.schema
+    val delta = GraftMaintenance.changeFeedRows(spark, src, srcV0, srcHead,
+      Some(schema))
+    // MERGE-MODE is only sound when the MV head IS the recorded state:
+    // the merge mutates the raw head, and an orphaned crashed commit on
+    // top would make the base unknowable — that case heals through one
+    // overwrite instead
     val doMerge = stateMerge &&
       GraftTableLog.latestVersion(mv).contains(mvV0)
-    // ONE action covers the emptiness check, the delete-image flag, and
-    // (merge mode) the touched-group count + key range — these were
-    // three separate driver actions over the same cached aggregate (r16
-    // optimization round). delta empty ⇔ its group-aggregate is empty,
-    // so the count serves the repack-only check (compaction/recluster —
-    // watermark advance without touching the view). hasDel (r17) is
-    // max(_mv_del) over the touched groups: an INSERT-ONLY span — every
-    // plain ingest refresh — provably has no vanished groups (net row
-    // counts only grow) and no rebuild-triggering groups (only delete
-    // images send a group to rebuild), so the vanished-key anti-join
-    // action and the rebuild-from-head plan branch are SKIPPED outright
-    // below instead of materializing empty (guide §2.4: remove work the
-    // driver can refute from facts already in hand).
-    val (dCount, hasDel, keyRange) =
-      if (!doMerge) {
-        val r = d.select(count(lit(1)).as("n"),
-          max(col("_mv_del")).as("del")).head()
-        (r.getLong(0), if (r.isNullAt(1)) 0 else r.getInt(1), None)
-      } else {
-        val r = d.select(count(lit(1)).as("n"),
-          max(col("_mv_del")).as("del"),
-          min(keyExpr(groupCols)).as("lo"),
-          max(keyExpr(groupCols)).as("hi")).head()
-        (r.getLong(0), if (r.isNullAt(1)) 0 else r.getInt(1),
-          if (r.getLong(0) == 0L) None
-          else Some((r.getString(2), r.getString(3))))
+    val das = deltaAggs(schema, aggs)
+    // The delta AGGREGATE (touched-group-sized, ≪ the row-level feed) is
+    // PERSISTED: the summary action below and the state write (plus the
+    // rebuild-key broadcast) all consume it, and each would otherwise
+    // re-run the change-feed diff from scratch. Aggregating FIRST also
+    // means the one feed execution shuffles group-sized partials, not
+    // row images.
+    val agg = delta.groupBy(groupCols.map(col): _*).agg(das.head, das.tail: _*)
+    val d = (if (doMerge) agg.withColumn(KeyCol, keyExpr(groupCols))
+      else agg).alias("d")
+    d.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    try {
+      // ONE action: the touched-group count (delta empty ⇔ its aggregate
+      // is empty — a repack-only span such as a compaction advances the
+      // watermark without touching the view), the saw-a-delete flag and,
+      // in merge mode, the touched key range. An insert-only span
+      // (hasDel false — every plain ingest refresh) sends no group to
+      // the rebuild-from-head branch, which then leaves the plan.
+      val r = described(spark, s"graft mv refresh $mv: delta") {
+        d.select(Seq(count(lit(1)), max(col("_mv_del"))) ++
+          (if (doMerge) Seq(min(col(KeyCol)), max(col(KeyCol))) else Nil)
+          : _*).head()
       }
-    if (dCount == 0L) {
-      if (!claimState(mv, seq + 1, srcHead, mvV0))
+      if (r.getLong(0) == 0L) {
+        if (!claimState(mv, seq + 1, srcHead, mvV0))
+          return latestState(mv).map(_._3).getOrElse(mvV0)
+        return mvV0
+      }
+      // min/max/hll cannot un-see a deleted row: groups a DELETE image
+      // touched rebuild from the head, semi-join-pruned to exactly
+      // those keys (one output row per key that still has rows)
+      val rebuilt =
+        if (!rebuildsOnDelete(aggs) || r.isNullAt(1) || r.getInt(1) == 0)
+          None
+        else {
+          val keys = d.filter(col("_mv_del") === 1)
+            .select(groupCols.map(col): _*).alias("k")
+          val kOn = groupCols.map(c => col(s"b.$c") <=> col(s"k.$c"))
+            .reduce(_ && _)
+          Some(fullState(
+            base.alias("b").join(broadcast(keys), kOn, "left_semi"),
+            groupCols, aggs))
+        }
+      val mvV =
+        if (doMerge)
+          described(spark, s"graft mv refresh $mv: state merge") {
+            mergeState(spark, mv, d, groupCols, aggs, schema, rebuilt,
+              (r.getString(2), r.getString(3)))
+          }
+        else {
+          described(spark, s"graft mv refresh $mv: state overwrite") {
+            overwriteState(spark, mv, mvV0, d, groupCols, aggs, schema,
+              rebuilt, stateMerge)
+          }
+          GraftTableLog.latestVersion(mv).getOrElse(
+            throw new IllegalStateException(
+              s"graft mv: state commit landed but no log under $mv"))
+        }
+      if (!claimState(mv, seq + 1, srcHead, mvV))
+        // a concurrent refresh won the CAS: our data version is orphaned
+        // by construction (no reader pins it); the winner's state governs
         return latestState(mv).map(_._3).getOrElse(mvV0)
-      return mvV0
+      mvV
+    } finally d.unpersist(false)
+  }
+
+  /** Per-aggregate fold of state `s(name)` with delta `d(name)` — the
+    * (column, value) pairs for every state column. Counts and sums add,
+    * an absent (NULL) side adding as 0. */
+  private def foldCols(aggs: Seq[MvAgg], schema: StructType,
+      s: String => Column, d: String => Column): Seq[(String, Column)] = {
+    def cnt(n: String): (String, Column) =
+      n -> (coalesce(s(n), lit(0)) + coalesce(d(n), lit(0)))
+    cnt(RowsCol) +: aggs.flatMap { a =>
+      def dec(n: String): (String, Column) = {
+        val t = sumType(schema, a.col)
+        n -> (coalesce(s(n), lit(0).cast(t)) +
+          coalesce(d(n), lit(0).cast(t))).cast(t)
+      }
+      a.func match {
+        case "count" => Seq(cnt(a.alias))
+        case "sum" => Seq(dec(a.alias), cnt(a.alias + "__cnt"))
+        case "avg" => Seq(dec(a.alias + "__sum"), cnt(a.alias + "__cnt"))
+        // least/greatest SKIP nulls — correct merge of an absent side
+        case "min" => Seq(a.alias -> least(s(a.alias), d(a.alias)))
+        case "max" => Seq(a.alias -> greatest(s(a.alias), d(a.alias)))
+        case "hll" =>
+          // register-wise max of state ⊔ insert-image sketch; absent
+          // side coalesces (register max over sketches of disjoint row
+          // sets ≡ sketch of the union, so insert-only folds are
+          // BIT-IDENTICAL to recompute)
+          val s0 = s(a.alias); val d0 = d(a.alias)
+          Seq(a.alias -> when(s0.isNull, d0).when(d0.isNull, s0)
+            .otherwise(graft.expr.HllAgg.merge2(s0, d0)))
+      }
     }
-    val cur0 = spark.read.format(fmt).option("path", mv)
-      .option("versionAsOf", mvV0.toString).load()
-    val cur = (keyRange match {
-      case Some((lo, hi)) =>
-        cur0.filter(col(KeyCol) >= lit(lo) && col(KeyCol) <= lit(hi))
-      case None => cur0
-    }).alias("c")
+  }
+
+  /** OVERWRITE-mode state write (and merge mode's orphan-head heal):
+    * the recorded state full-outer-joined with the delta, folded, and
+    * written over the whole MV table. */
+  private def overwriteState(spark: SparkSession, mv: String, mvV0: Long,
+      d: DataFrame, groupCols: Seq[String], aggs: Seq[MvAgg],
+      schema: StructType, rebuilt: Option[DataFrame],
+      clusterKey: Boolean): Unit = {
+    val cur = spark.read.format(fmt).option("path", mv)
+      .option("versionAsOf", mvV0.toString).load().alias("c")
     // FULL OUTER on null-safe group equality: NULL is a group key
     val on = groupCols.map(c => col(s"c.$c") <=> col(s"d.$c")).reduce(_ && _)
-    val j = cur.join(d, on, "full_outer")
-    val keyCols = groupCols.map(c => coalesce(col(s"c.$c"), col(s"d.$c")).as(c))
-    def add(name: String): Column =
-      (coalesce(col(s"c.$name"), lit(0)) + coalesce(col(s"d.$name"), lit(0)))
-        .as(name)
-    val merged = j.select(keyCols ++ Seq(
-      add(RowsCol),
-      coalesce(col("d._mv_del"), lit(0)).as("_mv_del"),
-      // the delta side always aggregates a non-null signed row count,
-      // so d-presence marks exactly the groups this delta touched
-      col(s"d.$RowsCol").isNotNull.as("_mv_touched")) ++
-      aggs.flatMap { a =>
-        a.func match {
-          case "count" => Seq(add(a.alias))
-          case "sum" =>
-            val t = sumType(schema, a.col)
-            Seq((coalesce(col(s"c.${a.alias}"), lit(0).cast(t)) +
-              coalesce(col(s"d.${a.alias}"), lit(0).cast(t))).cast(t)
-              .as(a.alias), add(a.alias + "__cnt"))
-          case "avg" =>
-            val t = sumType(schema, a.col)
-            Seq((coalesce(col(s"c.${a.alias}__sum"), lit(0).cast(t)) +
-              coalesce(col(s"d.${a.alias}__sum"), lit(0).cast(t))).cast(t)
-              .as(a.alias + "__sum"), add(a.alias + "__cnt"))
-          // least/greatest SKIP nulls — correct merge of an absent side
-          case "min" =>
-            Seq(least(col(s"c.${a.alias}"), col(s"d.${a.alias}")).as(a.alias))
-          case "max" =>
-            Seq(greatest(col(s"c.${a.alias}"), col(s"d.${a.alias}")).as(a.alias))
-          case "hll" =>
-            // register-wise max of state ⊔ insert-image sketch; absent
-            // side coalesces (register max over sketches of disjoint
-            // row sets ≡ sketch of the union, so insert-only folds are
-            // BIT-IDENTICAL to recompute)
-            val s0 = col(s"c.${a.alias}"); val d0 = col(s"d.${a.alias}")
-            Seq(when(s0.isNull, d0).when(d0.isNull, s0)
-              .otherwise(graft.expr.HllAgg.merge2(s0, d0)).as(a.alias))
-        }
-      }: _*)
-    // min/max/hll cannot un-see a deleted row: groups a DELETE image
-    // touched rebuild from the head, pruned to exactly those keys.
-    // hasDel == 0 (r17): no delete images anywhere in the span, so no
-    // group can need the rebuild — drop the whole branch from the plan
-    val needRebuild = rebuildsOnDelete(aggs) && hasDel == 1
-    val sCols = (groupCols ++ stateCols(aggs)) :+ "_mv_touched"
-    // the new full state, touched-flagged (rebuilt groups are touched
-    // by construction — only delete images send a group to rebuild)
-    val kept = {
-      val keepClean = merged.filter(col(RowsCol) > 0 &&
-          (if (needRebuild) col("_mv_del") === 0 else lit(true)))
-        .select(sCols.map(col): _*)
-      if (!needRebuild) keepClean
-      else {
-        val keys = merged.filter(col("_mv_del") === 1)
-          .select(groupCols.map(col): _*).distinct().alias("k")
-        val base = spark.read.format(fmt).option("path", src)
-          .option("versionAsOf", srcHead.toString).load().alias("b")
-        val kOn = groupCols.map(c => col(s"b.$c") <=> col(s"k.$c"))
-          .reduce(_ && _)
-        val rebuilt = fullState(
-          base.join(broadcast(keys), kOn, "left_semi"), groupCols, aggs)
-          .withColumn("_mv_touched", lit(true))
-          .select(sCols.map(col): _*)
-        keepClean.unionByName(rebuilt)
-      }
+    val merged = cur.join(d, on, "full_outer").select(
+      groupCols.map(c => coalesce(col(s"c.$c"), col(s"d.$c")).as(c)) ++
+        foldCols(aggs, schema, n => col(s"c.$n"), n => col(s"d.$n"))
+          .map { case (n, v) => v.as(n) } :+
+        coalesce(col("d._mv_del"), lit(0)).as("_mv_del"): _*)
+    val sCols = groupCols ++ stateCols(aggs)
+    // rebuilt groups replace their folded rows
+    val kept = merged.filter(col(RowsCol) > 0 &&
+        (if (rebuilt.isDefined) col("_mv_del") === 0 else lit(true)))
+      .select(sCols.map(col): _*)
+    val out = rebuilt.fold(kept)(rb =>
+      kept.unionByName(rb.select(sCols.map(col): _*)))
+    (if (clusterKey) clustered(out, groupCols) else out)
+      .write.format(fmt).option("path", mv)
+      .mode(org.apache.spark.sql.SaveMode.Overwrite).save()
+  }
+
+  /** MERGE-mode state write: ONE row-level `MERGE INTO` the MV keyed by
+    * `_mv_key` — one lock, one swap, one MV version. Its source is one
+    * row per touched group, tagged by `_mv_op`:
+    *   - `fold`: the group's delta, folded into the matched state row by
+    *     the UPDATE's assignments (or INSERTed as the new group's state);
+    *   - `replace`: a group rebuilt from the head (min/max/hll after a
+    *     DELETE image), written over the state row whole;
+    *   - `delete`: a rebuild key with no rows left at the head.
+    *
+    * {{{
+    * MERGE INTO mv t USING source s
+    *   ON t._mv_key = s._mv_key AND t._mv_key BETWEEN lo AND hi
+    * WHEN MATCHED AND s._mv_op = 'delete' OR t._mv_rows + s._mv_rows <= 0
+    *   THEN DELETE
+    * WHEN MATCHED AND s._mv_op = 'replace' THEN UPDATE SET *
+    * WHEN MATCHED THEN UPDATE SET <fold>
+    * WHEN NOT MATCHED AND s._mv_op <> 'delete' AND s._mv_rows > 0
+    *   THEN INSERT *
+    * }}}
+    * The key range `[lo, hi]` (the delta's, from the summary action) is
+    * a target-only conjunct Spark pushes to the row-level scan: the
+    * range-clustered state's zone maps prune the rewrite to the touched
+    * band's files. Source keys are unique and non-null by construction
+    * (one row per group, the injective [[keyExpr]]). Returns the MV
+    * head after the commit. */
+  private def mergeState(spark: SparkSession, mv: String, d: DataFrame,
+      groupCols: Seq[String], aggs: Seq[MvAgg], schema: StructType,
+      rebuilt: Option[DataFrame], keyRange: (String, String)): Long = {
+    import org.apache.spark.sql.catalyst.expressions.Alias
+    import org.apache.spark.sql.catalyst.plans.logical.{Assignment,
+      DeleteAction, InsertStarAction, Join, MergeIntoTable, Project,
+      UpdateAction, UpdateStarAction}
+    val sCols = groupCols ++ stateCols(aggs) :+ KeyCol
+    val fold = (if (rebuilt.isDefined) d.filter(col("_mv_del") === 0) else d)
+      .select(sCols.map(col) :+ lit("fold").as(OpCol): _*)
+    val source = rebuilt.fold(fold) { rb =>
+      val k = d.filter(col("_mv_del") === 1).alias("k")
+      val on = groupCols.map(c => col(s"k.$c") <=> col(s"r.$c"))
+        .reduce(_ && _)
+      fold.unionByName(k.join(rb.alias("r"), on, "left").select(
+        groupCols.map(c => col(s"k.$c").as(c)) ++
+          stateCols(aggs).map(c => col(s"r.$c").as(c)) ++
+          Seq(col(s"k.$KeyCol").as(KeyCol),
+            when(col(s"r.$RowsCol").isNull, lit("delete"))
+              .otherwise(lit("replace")).as(OpCol)): _*))
     }
-    def overwriteCommit(): Unit = {
-      val out = kept.drop("_mv_touched")
-      (if (stateMerge) clustered(out, groupCols) else out)
-        .write.format(fmt).option("path", mv)
-        .mode(org.apache.spark.sql.SaveMode.Overwrite).save()
+    def t(n: String): Column = col(s"t.$n")
+    def s(n: String): Column = col(s"s.$n")
+    val on = t(KeyCol) === s(KeyCol) &&
+      t(KeyCol).between(lit(keyRange._1), lit(keyRange._2))
+    val set = foldCols(aggs, schema, t, s)
+    val clauses = Seq(
+      s(OpCol) === lit("delete") || t(RowsCol) + s(RowsCol) <= 0,
+      s(OpCol) === lit("replace"),
+      s(OpCol) =!= lit("delete") && s(RowsCol) > 0) ++ set.map(_._2)
+    // resolved through an analyzed join over the MV's own relation, so
+    // the command, its condition and every action share attribute ids
+    val Project(list, Join(target, srcPlan, _, Some(cond), _)) =
+      spark.read.format(fmt).option("path", mv).load().alias("t")
+        .join(source.alias("s"), on)
+        .select(clauses.zipWithIndex.map { case (c, i) => c.as(s"_c$i") }: _*)
+        .queryExecution.analyzed
+    val exprs = list.map { case a: Alias => a.child }
+    val assignments = set.map(_._1).zip(exprs.drop(3)).map { case (n, e) =>
+      Assignment(target.output.find(_.name == n).get, e)
     }
-    if (!doMerge) overwriteCommit()
-    else {
-      // MERGE-mode: upsert only the touched survivors, delete vanished
-      // keys — state READ pruned to the touched key range above, state
-      // WRITE ∝ touched groups. `kept` is touched-group-sized here
-      // (cur was pruned, d is the delta), so persisting it lets its
-      // three consumers share one execution of the fold.
-      val upserts = kept.filter(col("_mv_touched"))
-        .drop("_mv_touched").withColumn(KeyCol, keyExpr(groupCols))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      try {
-        val touchedKeys = d.select(keyExpr(groupCols).as(KeyCol))
-        // vanished = touched groups with no surviving state row. An
-        // insert-only span (hasDel == 0) cannot vanish a group — net
-        // per-group row counts only grow — so the anti-join action is
-        // skipped on the driver's own facts (r17)
-        val cap = mergeDeleteCap
-        val vanished =
-          if (hasDel == 0) Seq.empty[String]
-          else touchedKeys.except(upserts.select(KeyCol))
-            .limit(cap + 1).collect().map(_.getString(0)).toSeq
-        if (vanished.size > cap) {
-          // the vanished set outgrew the keyed-delete plan. `kept` is
-          // RANGE-PRUNED here and cannot serve a whole-state
-          // overwrite (it would drop every out-of-range group) — heal
-          // by full recompute of the source head instead
-          clustered(fullState(spark.read.format(fmt).option("path", src)
-            .option("versionAsOf", srcHead.toString).load(),
-            groupCols, aggs), groupCols)
-            .write.format(fmt).option("path", mv)
-            .mode(org.apache.spark.sql.SaveMode.Overwrite).save()
-        }
-        else {
-          if (vanished.nonEmpty)
-            // the range conjunct is what PRUNES: zone maps refute
-            // whole state files against [min, max] (a many-literal IN
-            // alone defeats file-level refutation), the IN then
-            // refines rows inside the surviving band
-            GraftMaintenance.delete(spark, mv,
-              col(KeyCol) >= lit(vanished.min) &&
-                col(KeyCol) <= lit(vanished.max) &&
-                col(KeyCol).isin(vanished: _*))
-          // every touched group either survives (one upsert row) or
-          // vanished, so |upserts| = dCount − |vanished| — no separate
-          // isEmpty action over the cache needed; and the upsert keys
-          // are unique/non-null BY CONSTRUCTION (one row per group)
-          // with their range already in hand from the delta head, so
-          // the merge skips its source-key audit action too (r16)
-          if (dCount > vanished.size)
-            GraftMaintenance.mergeTrustedKeys(spark, mv, upserts, KeyCol,
-              (keyRange.get._1, keyRange.get._2))
-        }
-      } finally upserts.unpersist(false)
-    }
-    val mvV = GraftTableLog.latestVersion(mv).getOrElse(
-      throw new IllegalStateException(
-        s"graft mv: state commit landed but no log under $mv"))
-    if (!claimState(mv, seq + 1, srcHead, mvV))
-      // a concurrent refresh won the CAS: our data version is orphaned
-      // by construction (no reader pins it); the winner's state governs
-      return latestState(mv).map(_._3).getOrElse(mvV0)
-    mvV
-    } finally d.unpersist(false)
+    GraftMaintenance.runRowLevel(spark, mv, MergeIntoTable(target, srcPlan,
+      cond,
+      Seq(DeleteAction(Some(exprs(0))), UpdateStarAction(Some(exprs(1))),
+        UpdateAction(None, assignments)),
+      Seq(InsertStarAction(Some(exprs(2)))), Nil,
+      withSchemaEvolution = false))
   }
 
   /** The view's CURRENT contents — the committed state projected to the

@@ -1312,7 +1312,11 @@ case class GraftPartitionReaderFactory(required: StructType,
     // a planned file gone at open was archived by a concurrent rewrite's
     // commit: the retryable conflict it is, not an I/O failure (a SQL
     // MERGE racing a compaction re-plans and retries)
-    try aggs match {
+    def vanished(e: java.io.FileNotFoundException) =
+      new GraftConcurrentWriteException(s"graft scan: $file " +
+        "vanished after planning (a concurrent rewrite committed) — " +
+        "re-plan against the new head and retry", e)
+    val reader = try aggs match {
       case Some(specs) if groupBy.nonEmpty =>
         new GraftGroupedAggPartitionReader(file, groupBy, specs, conj,
           fp.deletes, aliases, hc)
@@ -1327,11 +1331,15 @@ case class GraftPartitionReaderFactory(required: StructType,
           new GraftPartitionReader(file, required, conj, limit, fp.deletes,
             aliases, hc)
       }
-    } catch {
-      case e: java.io.FileNotFoundException =>
-        throw new GraftConcurrentWriteException(s"graft scan: $file " +
-          "vanished after planning (a concurrent rewrite committed) — " +
-          "re-plan against the new head and retry", e)
+    } catch { case e: java.io.FileNotFoundException => throw vanished(e) }
+    // ... and gone mid-read: the local file system re-opens the file by
+    // path for each vectored row-group read
+    new PartitionReader[InternalRow] {
+      override def next(): Boolean =
+        try reader.next()
+        catch { case e: java.io.FileNotFoundException => throw vanished(e) }
+      override def get(): InternalRow = reader.get()
+      override def close(): Unit = reader.close()
     }
   }
 }

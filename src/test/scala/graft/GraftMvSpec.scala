@@ -229,6 +229,8 @@ class GraftMvSpec extends SparkSpec {
       Seq("lang"), Seq(MvAgg("sum", "source", "s"))))
     intercept[IllegalArgumentException](GraftMv.create(spark, mv, src,
       Seq("lang"), Seq(MvAgg("count", "*", "bad__alias"))))
+    intercept[IllegalArgumentException](GraftMv.create(spark, mv, src,
+      Seq("lang"), Seq(MvAgg("count", "*", "_mv_op"))))
     GraftMv.create(spark, mv, src, Seq("lang"), Seq(MvAgg("count", "*", "n")))
     intercept[IllegalStateException](GraftMv.create(spark, mv, src,
       Seq("lang"), Seq(MvAgg("count", "*", "n"))))
@@ -272,16 +274,16 @@ class GraftMvSpec extends SparkSpec {
   }
 
   test("merge-mode state keys stay audit-clean (mergeTrustedKeys invariant)") {
-    // mergeTrustedKeys (r16) skips the public merge's null/duplicate-key
-    // audit on GraftMv's word: the upserts are one row per group from a
-    // groupBy, keyed by the injective length-prefixed keyExpr, with the
-    // range from the same aggregate that sized the delta. Pin that
-    // promise at the OBSERVABLE output: after every merge-mode refresh
-    // shape (insert fold, delete-driven rebuild, group vanish, update
-    // images), the state table must hold exactly one NON-NULL, UNIQUE
-    // _mv_key per row. A future refactor that fed an audit-dirty source
-    // through the trusted path would accumulate duplicate or null state
-    // keys and fail here loudly instead of corrupting silently.
+    // The state MERGE runs no null/duplicate-key audit of its source:
+    // the source is one row per touched group from a groupBy, keyed by
+    // the injective length-prefixed keyExpr, with the range from the
+    // same aggregate that sized the delta. Pin that promise at the
+    // OBSERVABLE output: after every merge-mode refresh shape (insert
+    // fold, delete-driven rebuild, group vanish, update images), the
+    // state table must hold exactly one NON-NULL, UNIQUE _mv_key per
+    // row. A future refactor that fed an audit-dirty source into the
+    // MERGE would accumulate duplicate or null state keys and fail here
+    // loudly instead of corrupting silently.
     val src = tmp("mtk"); val mv = tmp("mtk_mv")
     append(src, slice(0))
     GraftMv.create(spark, mv, src, Seq("lang"), aggs, stateMerge = true)
@@ -369,28 +371,150 @@ class GraftMvSpec extends SparkSpec {
     assert(served(mv) == recompute(src))
   }
 
-  test("merge-mode cap overflow heals by full recompute, never a pruned overwrite") {
+  test("merge-mode multi-group vanish deletes in the one MERGE; untouched groups survive") {
     val src = tmp("cap"); val mv = tmp("cap_mv")
     append(src, slice(0)); append(src, slice(1))
     sys.props("graft.mv.statePartitions") = "4"
-    sys.props("graft.mv.mergeDeleteCap") = "1"
     try {
       GraftMv.create(spark, mv, src, Seq("lang"), aggs, stateMerge = true)
-      // retire SEVERAL whole groups: vanished keys > cap=1 → the
-      // overflow path must recompute the WHOLE state (a kept-based
-      // overwrite would drop every untouched out-of-range group)
+      // retire SEVERAL whole groups: their DELETE clause and the key
+      // range in ON must leave every untouched out-of-range group in
+      // the state files the MERGE does not rewrite
       val langs = spark.read.format(fmt).option("path", src).load()
         .select("lang").na.drop().distinct().limit(3).collect()
         .map(_.getString(0)).toSeq
       assert(langs.size >= 2, "fixture needs several groups")
       GraftMaintenance.delete(spark, src, col("lang").isin(langs: _*))
+      val before = GraftTableLog.versions(mv).size
       GraftMv.refresh(spark, mv)
+      assert(GraftTableLog.versions(mv).size == before + 1,
+        "a multi-group vanish must commit ONE MV version")
       assert(served(mv) == recompute(src),
-        "untouched groups must survive the overflow heal")
-    } finally {
-      sys.props.remove("graft.mv.statePartitions")
-      sys.props.remove("graft.mv.mergeDeleteCap")
+        "untouched groups must survive the multi-group vanish")
+    } finally sys.props.remove("graft.mv.statePartitions")
+  }
+
+  test("merge-mode: each refresh commits one MV version (vanish + update + insert, insert-only, compaction, merge-on-read)") {
+    val src = tmp("one"); val mv = tmp("one_mv"); val mvAr = tmp("one_mv_ar")
+    append(src, slice(0)); append(src, slice(1))
+    // two views over one source: `aggs` (min/max) sends delete-touched
+    // groups through the rebuild rows ('replace' / 'delete'); the
+    // arithmetic-only view folds every group and vanishes one through
+    // the MERGE's net-row-count DELETE clause
+    val arith = aggs.filterNot(a => a.func == "min" || a.func == "max")
+    val arithCols = Seq("lang") ++ arith.map(_.alias)
+    def arithServed: Seq[Row] = GraftMv.read(spark, mvAr).orderBy("lang")
+      .collect().toSeq
+    def arithRecompute: Seq[Row] = recompute(src).map(r =>
+      Row.fromSeq(arithCols.map(c => r.get(r.fieldIndex(c)))))
+    sys.props("graft.mv.statePartitions") = "4"
+    try {
+      GraftMv.create(spark, mv, src, Seq("lang"), aggs, stateMerge = true)
+      GraftMv.create(spark, mvAr, src, Seq("lang"), arith, stateMerge = true)
+      def span(what: String, versions: Int)(change: => Unit): Unit = {
+        change
+        Seq(mv, mvAr).foreach { v =>
+          val before = GraftTableLog.versions(v).size
+          GraftMv.refresh(spark, v)
+          assert(GraftTableLog.versions(v).size == before + versions,
+            s"$what: $v must commit $versions MV version(s)")
+        }
+        assert(served(mv) == recompute(src), what)
+        assert(arithServed == arithRecompute, what)
+      }
+      val langs = spark.read.format(fmt).option("path", src).load()
+        .select("lang").na.drop().distinct().collect().map(_.getString(0))
+        .sorted.toSeq
+      assert(langs.size >= 3, "fixture needs several groups")
+      span("vanish + update + insert", 1) {
+        // one group vanishes, the others' rows update, one group is new
+        GraftMaintenance.delete(spark, src, col("lang") === lit(langs.head))
+        val upd = spark.read.format(fmt).option("path", src).load()
+          .filter(pmod(col("doc_id"), lit(3)) === 0)
+          .withColumn("n_chars", col("n_chars") + 5)
+        val fresh = slice(3).limit(5).withColumn("lang", lit("zz_new"))
+        GraftMaintenance.merge(spark, src, upd.unionByName(fresh), "doc_id")
+      }
+      assert(!served(mv).exists(_.getString(0) == langs.head))
+      assert(served(mv).exists(_.getString(0) == "zz_new"))
+      span("insert-only", 1)(append(src, slice(2)))
+      span("compaction-only", 0)(GraftMaintenance.compact(spark, src))
+      // merge-on-read: the source delete writes deletion vectors and the
+      // state MERGE plans as WriteDelta — still one MV version
+      spark.conf.set("spark.graft.rowLevelMode", "merge-on-read")
+      try span("merge-on-read vanish", 1) {
+        GraftMaintenance.delete(spark, src, col("lang") === lit(langs(1)))
+      } finally spark.conf.unset("spark.graft.rowLevelMode")
+      Seq(mv, mvAr).foreach(v => assert(GraftMv.latestState(v).get._2 ==
+        GraftTableLog.latestVersion(src).get, s"$v watermark at the head"))
+    } finally sys.props.remove("graft.mv.statePartitions")
+  }
+
+  test("merge-mode refresh names its jobs, runs one row-level command, restores the caller's description") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.util.QueryExecutionListener
+    import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch, TimeUnit}
+    val src = tmp("desc"); val mv = tmp("desc_mv")
+    append(src, slice(0))
+    GraftMv.create(spark, mv, src, Seq("lang"), aggs, stateMerge = true)
+    GraftMaintenance.delete(spark, src, pmod(col("doc_id"), lit(5)) === 0)
+    append(src, slice(1))
+    val sc = spark.sparkContext
+    val group = s"graft-mv-desc-${java.util.UUID.randomUUID()}"
+    val descs = new ConcurrentLinkedQueue[String]()
+    val marker = new CountDownLatch(1)
+    val jobs = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (e.properties != null &&
+            e.properties.getProperty("spark.jobGroup.id") == group) {
+          val d = e.properties.getProperty("spark.job.description")
+          if (d == "marker") marker.countDown() else descs.add(d)
+        }
     }
+    // the executed plan root of every query over the view's relation
+    // (the source's own delete may report after registration)
+    val plans = new ConcurrentLinkedQueue[String]()
+    def note(qe: QueryExecution): Unit =
+      if (qe.analyzed.toString.contains(s"graft_parquet($mv)"))
+        plans.add(qe.executedPlan.nodeName)
+    val qel = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        note(qe)
+      override def onFailure(f: String, qe: QueryExecution,
+          e: Exception): Unit = note(qe)
+    }
+    sc.addSparkListener(jobs)
+    spark.listenerManager.register(qel)
+    try {
+      sc.setJobGroup(group, "caller's job")
+      try {
+        GraftMv.refresh(spark, mv)
+        assert(sc.getLocalProperty("spark.job.description") == "caller's job",
+          "refresh must restore the caller's job description")
+        sc.setJobDescription("marker")
+        sc.parallelize(Seq(1), 1).count()
+      } finally sc.clearJobGroup()
+      assert(marker.await(60, TimeUnit.SECONDS),
+        "the listener never saw the marker job")
+      val seen = descs.toArray(Array.empty[String]).toSet
+      Seq("delta", "state merge").foreach { phase =>
+        assert(seen.contains(s"graft mv refresh $mv: $phase"),
+          s"no job described as the $phase phase: $seen")
+      }
+      // the command's own execution event can trail its jobs
+      val deadline = System.currentTimeMillis() + 20000
+      def rowLevel = plans.toArray(Array.empty[String]).toSeq
+        .filter(n => n == "ReplaceData" || n == "WriteDelta")
+      while (rowLevel.isEmpty && System.currentTimeMillis() < deadline)
+        Thread.sleep(20)
+      assert(rowLevel == Seq("ReplaceData"),
+        s"one row-level command per refresh, got $rowLevel")
+    } finally {
+      sc.removeSparkListener(jobs)
+      spark.listenerManager.unregister(qel)
+    }
+    assert(served(mv) == recompute(src))
   }
 
   test("merge-mode heals an orphaned head by one full overwrite") {
