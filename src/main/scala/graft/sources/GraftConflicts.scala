@@ -162,6 +162,19 @@ object GraftConflicts {
     }
   }
 
+  /** `body` — a scan's open or row-group read of the planned `file` —
+    * with a vanished file retyped: a concurrent rewrite's commit
+    * archived it after planning, the retryable conflict it is, not an
+    * I/O failure (a SQL MERGE racing a compaction re-plans and
+    * retries). */
+  def vanishedAsConflict[T](file: String)(body: => T): T =
+    try body catch {
+      case e: java.io.FileNotFoundException =>
+        throw new GraftConcurrentWriteException(s"graft scan: $file " +
+          "vanished after planning (a concurrent rewrite committed) — " +
+          "re-plan against the new head and retry", e)
+    }
+
   /** The read snapshot an operation plans against: the head version
     * and the live deletion-vector set at capture time. Take it BEFORE
     * planning (before the connector read) so the captured state is

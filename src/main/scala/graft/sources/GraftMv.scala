@@ -59,7 +59,11 @@ final case class MvAgg(func: String, col: String, alias: String)
   * data (the writer path serializes physically on the table's rewrite
   * lock) but exactly ONE wins the state CAS; the loser's data version
   * is orphaned-by-construction and the loser returns the winner's
-  * state. No MV-level lock exists to leak or age out.
+  * state. A merge-mode MERGE adds the delta to the rows it reads, so
+  * its refresher claims only a commit that sits directly on the
+  * recorded version; one that read a concurrent refresher's commit
+  * folds the delta twice and stays unclaimed, like a CAS loser's. No
+  * MV-level lock exists to leak or age out.
   *
   * Scale notes: the state table is |groups|-sized, so the per-refresh
   * overwrite is group-cardinality work, not source-table work (merge
@@ -397,12 +401,16 @@ object GraftMv {
     val aliases = aggs.map(_.alias)
     require(aliases.distinct == aliases &&
         aliases.forall(a => !groupCols.contains(a) &&
-          !a.startsWith("_mv_") && !a.contains("__")),
+          !reservedAlias(a) && !a.contains("__")),
       "graft mv: aliases must be unique, distinct from group columns, " +
         "and free of the '_mv_' prefix and '__' (reserved)")
     writeDef(mv, src, groupCols, aggs, stateMerge)
     healToState(spark, mv, src, groupCols, aggs, srcV, stateMerge)
   }
+
+  /** `_mv_` names the refresh's own columns (row count, key, delete
+    * flag, MERGE row kind): no aggregate alias may take it. */
+  private def reservedAlias(a: String): Boolean = a.startsWith("_mv_")
 
   /** Full recompute of source version `srcV` committed as MV data + a
     * state record — create's body and refresh's heal path. */
@@ -439,8 +447,22 @@ object GraftMv {
     * the MV version now holding the current state (unchanged when the
     * source head equals the watermark). Safe to call concurrently and
     * to re-run after any crash — see the class doc's commit protocol. */
-  def refresh(spark: SparkSession, mv: String): Long = {
+  def refresh(spark: SparkSession, mv: String): Long =
+    refresh(spark, mv, () => ())
+
+  /** [[refresh]] with `beforeStateMerge` run between merge mode's head
+    * check and its state MERGE — the window a concurrent refresher's
+    * commit can land in (specs drive it deterministically). */
+  private[graft] def refresh(spark: SparkSession, mv: String,
+      beforeStateMerge: () => Unit): Long = {
     val (src, groupCols, aggs, stateMerge) = readDef(mv)
+    aggs.find(a => reservedAlias(a.alias)).foreach { a =>
+      // a view defined before the prefix was reserved: its alias would
+      // collide with the refresh's own `_mv_` columns
+      throw new IllegalStateException(s"graft mv: alias '${a.alias}' of " +
+        s"$mv takes the reserved '_mv_' prefix the refresh's own columns " +
+        "use — drop the view and re-create it under another alias")
+    }
     // every version and the source schema resolve ONCE here and are
     // passed down: each re-resolution is another log listing
     val srcHead = GraftTableLog.latestVersion(src).getOrElse(
@@ -515,12 +537,26 @@ object GraftMv {
             groupCols, aggs))
         }
       val mvV =
-        if (doMerge)
-          described(spark, s"graft mv refresh $mv: state merge") {
+        if (doMerge) {
+          beforeStateMerge()
+          val v = described(spark, s"graft mv refresh $mv: state merge") {
             mergeState(spark, mv, d, groupCols, aggs, schema, rebuilt,
               (r.getString(2), r.getString(3)))
           }
-        else {
+          // the MERGE ADDS the delta to whatever state rows it read, so
+          // its commit is the state at srcHead only if it read mvV0. A
+          // head of mvV0 + 1 right after it proves that: our commit is
+          // at most the head and above mvV0, and nothing landed between
+          // mvV0 and it. mvV0 means nothing committed at all (the MERGE
+          // matched no state file and inserted nothing). Any other head
+          // means a concurrent refresher committed in between and this
+          // commit may fold the delta twice: never claim it — the
+          // winner's state governs, and the next refresh heals the
+          // orphan head through one overwrite
+          if (v != mvV0 && v != mvV0 + 1)
+            return latestState(mv).map(_._3).getOrElse(mvV0)
+          v
+        } else {
           described(spark, s"graft mv refresh $mv: state overwrite") {
             overwriteState(spark, mv, mvV0, d, groupCols, aggs, schema,
               rebuilt, stateMerge)

@@ -1309,14 +1309,7 @@ case class GraftPartitionReaderFactory(required: StructType,
     // presence correctly demotes an agg reader's footer-only fast path)
     val conj = pushed ++ runtimeHolder.filters
     val hc = serConf.value
-    // a planned file gone at open was archived by a concurrent rewrite's
-    // commit: the retryable conflict it is, not an I/O failure (a SQL
-    // MERGE racing a compaction re-plans and retries)
-    def vanished(e: java.io.FileNotFoundException) =
-      new GraftConcurrentWriteException(s"graft scan: $file " +
-        "vanished after planning (a concurrent rewrite committed) — " +
-        "re-plan against the new head and retry", e)
-    val reader = try aggs match {
+    aggs match {
       case Some(specs) if groupBy.nonEmpty =>
         new GraftGroupedAggPartitionReader(file, groupBy, specs, conj,
           fp.deletes, aliases, hc)
@@ -1329,17 +1322,8 @@ case class GraftPartitionReaderFactory(required: StructType,
             fp.deletes, aliases, hc)
         case None =>
           new GraftPartitionReader(file, required, conj, limit, fp.deletes,
-            aliases, hc)
+            aliases, hc, planned = true)
       }
-    } catch { case e: java.io.FileNotFoundException => throw vanished(e) }
-    // ... and gone mid-read: the local file system re-opens the file by
-    // path for each vectored row-group read
-    new PartitionReader[InternalRow] {
-      override def next(): Boolean =
-        try reader.next()
-        catch { case e: java.io.FileNotFoundException => throw vanished(e) }
-      override def get(): InternalRow = reader.get()
-      override def close(): Unit = reader.close()
     }
   }
 }
@@ -1398,7 +1382,7 @@ class GraftTopNPartitionReader(file: String, required: StructType,
           -compareRows(a, b)
       })
     val inner = new GraftPartitionReader(file, required, pushed, -1,
-      deletes, aliases, hadoopConf)
+      deletes, aliases, hadoopConf, planned = true)
     try {
       while (inner.next()) {
         val row = inner.get() // fresh GenericInternalRow per row — safe to keep
@@ -1459,7 +1443,7 @@ class GraftGroupedAggPartitionReader(file: String, groupBy: Seq[StructField],
     // aliases matter only for pushed FILTERS here — aggregate/group
     // columns over renamed fields were declined at pushdown
     val inner = new GraftPartitionReader(file, scanSchema, pushed, -1,
-      deletes, aliases, hadoopConf)
+      deletes, aliases, hadoopConf, planned = true)
     val idx = scanSchema.fieldNames.zipWithIndex.toMap
     // columns this file predates read as null (schema evolution) —
     // group keys become null keys, aggregate inputs contribute nothing
@@ -1550,7 +1534,8 @@ class GraftAggPartitionReader(file: String, specs: Seq[GraftAggSpec],
   private var result: InternalRow = _
 
   private def computeFromFooter(): Option[Array[Any]] = {
-    val in = GraftParquetIO.open(new Path(file), hadoopConf)
+    val in = GraftConflicts.vanishedAsConflict(file)(
+      GraftParquetIO.open(new Path(file), hadoopConf))
     try {
       val blocks = in.getFooter.getBlocks.asScala.toSeq
       val rowCount = blocks.map(_.getRowCount).sum
@@ -1606,7 +1591,7 @@ class GraftAggPartitionReader(file: String, specs: Seq[GraftAggSpec],
       GraftParquetV2.footerSchema(file, hadoopConf))
     val scanSchema = StructType(schema.fields.filter(f => cols.contains(f.name)))
     val inner = new GraftPartitionReader(file, scanSchema, pushed, -1,
-      deletes, aliases, hadoopConf)
+      deletes, aliases, hadoopConf, planned = true)
     val idx = scanSchema.fieldNames.zipWithIndex.toMap
     // columns this file predates read as null (schema evolution):
     // count(col) sees 0, min/max/sum skip — the aggregate semantics of
@@ -1686,11 +1671,16 @@ class GraftPartitionReader(file: String, required: StructType,
     pushed: Array[Filter], limit: Int = -1,
     deletes: GraftDvBitmap = GraftDvBitmap.empty,
     aliases: Map[String, Seq[String]] = Map.empty,
-    hadoopConf: Configuration = GraftParquetWrite.sessionConf())
+    hadoopConf: Configuration = GraftParquetWrite.sessionConf(),
+    // a file a table scan planned (not a log, manifest or DV read): its
+    // open and row-group reads retype a vanished file as the conflict
+    planned: Boolean = false)
     extends PartitionReader[InternalRow] {
   private var emitted = 0L
   private val conf = hadoopConf
-  private val in = GraftParquetIO.open(new Path(file), conf)
+  private def io[T](body: => T): T =
+    if (planned) GraftConflicts.vanishedAsConflict(file)(body) else body
+  private val in = io(GraftParquetIO.open(new Path(file), conf))
   private val fileSchema = in.getFooter.getFileMetaData.getSchema
 
   /** RENAME COLUMN resolution: the requested (logical) name → the
@@ -1807,7 +1797,9 @@ class GraftPartitionReader(file: String, required: StructType,
         ordinal += b.getRowCount // pruned rows still occupy ordinals
         GraftScanTelemetry.skippedGroups.increment()
       } else {
-        val pages = in.readNextRowGroup()
+        // the local file system re-opens the file by path for each
+        // vectored row-group read: it can vanish mid-scan too
+        val pages = io(in.readNextRowGroup())
         GraftScanTelemetry.decodedGroups.increment()
         recordReader = columnIO.getRecordReader(pages,
           new org.apache.parquet.example.data.simple.convert.GroupRecordConverter(projection))

@@ -218,6 +218,69 @@ class GraftMvSpec extends SparkSpec {
     assert(srcV == GraftTableLog.latestVersion(src).get)
   }
 
+  test("merge-mode concurrent refreshes never serve a double fold") {
+    val src = tmp("mrace"); val mv = tmp("mrace_mv")
+    append(src, slice(0))
+    GraftMv.create(spark, mv, src, Seq("lang"), aggs, stateMerge = true)
+    val before = served(mv)
+    append(src, slice(1))
+    val failures = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
+    val threads = (0 until 2).map { _ =>
+      new Thread(() =>
+        try GraftMv.refresh(spark, mv)
+        catch { case e: Throwable => failures.add(e) })
+    }
+    threads.foreach(_.start()); threads.foreach(_.join())
+    // a MERGE whose read went stale refuses (retryable); nothing else
+    failures.forEach(e =>
+      assert(e.isInstanceOf[graft.sources.GraftConcurrentWriteException], e))
+    // served is the old state or the new one, never a fold applied twice
+    val now = served(mv)
+    assert(now == before || now == recompute(src), "double-folded state")
+    GraftMv.refresh(spark, mv)
+    assert(served(mv) == recompute(src))
+    assert(GraftMv.latestState(mv).get._2 ==
+      GraftTableLog.latestVersion(src).get)
+  }
+
+  test("merge-mode: a refresh committed between the head check and the state MERGE is never claimed twice") {
+    val src = tmp("dbl"); val mv = tmp("dbl_mv")
+    append(src, slice(0))
+    GraftMv.create(spark, mv, src, Seq("lang"), aggs, stateMerge = true)
+    val before = served(mv)
+    append(src, slice(1))
+    val (seq0, _, mvV0) = GraftMv.latestState(mv).get
+    val fs = new org.apache.hadoop.fs.Path(mv)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val claim = new org.apache.hadoop.fs.Path(mv,
+      f"_graft_mv/state.${seq0 + 1}%010d")
+    // refresher A's whole MERGE lands inside B's window; A then stalls
+    // before its state claim (the claim file is taken back: A never
+    // made it). B's MERGE reads A's rows and folds the delta again
+    val b = GraftMv.refresh(spark, mv, () => {
+      assert(GraftMv.refresh(spark, mv) == mvV0 + 1)
+      assert(fs.delete(claim, false))
+    })
+    assert(GraftTableLog.latestVersion(mv).get == mvV0 + 2,
+      "B's MERGE must have committed on top of A's")
+    assert(GraftMv.latestState(mv).get._1 == seq0,
+      "B must not claim a commit that did not read the recorded state")
+    assert(b == mvV0 && served(mv) == before)
+    // the next refresh heals the double-folded head by one overwrite
+    GraftMv.refresh(spark, mv)
+    assert(served(mv) == recompute(src))
+    // A claims in time: B returns A's version, which readers serve
+    append(src, slice(2))
+    val mvV1 = GraftMv.latestState(mv).get._3
+    val headA = GraftTableLog.latestVersion(mv).get + 1
+    val b2 = GraftMv.refresh(spark, mv, () => {
+      assert(GraftMv.refresh(spark, mv) == headA)
+    })
+    assert(b2 == headA && GraftMv.latestState(mv).get._3 == headA &&
+      headA > mvV1)
+    assert(served(mv) == recompute(src))
+  }
+
   test("definition is write-once and validated") {
     val src = tmp("val"); val mv = tmp("val_mv")
     append(src, slice(0))
@@ -234,6 +297,17 @@ class GraftMvSpec extends SparkSpec {
     GraftMv.create(spark, mv, src, Seq("lang"), Seq(MvAgg("count", "*", "n")))
     intercept[IllegalStateException](GraftMv.create(spark, mv, src,
       Seq("lang"), Seq(MvAgg("count", "*", "n"))))
+    // a definition that predates the reserved prefix refuses to refresh
+    // with a clear message instead of an ambiguous-column failure
+    val defFile = new org.apache.hadoop.fs.Path(mv, "_graft_mv/def")
+    val fs = defFile.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val body = graft.sources.GraftFsContract.readBody(fs, defFile)
+    val out = fs.create(defFile, true)
+    try out.write(body.replace("agg=count:*:n", "agg=count:*:_mv_op")
+      .getBytes("UTF-8")) finally out.close()
+    append(src, slice(1))
+    val e = intercept[IllegalStateException](GraftMv.refresh(spark, mv))
+    assert(e.getMessage.contains("reserved '_mv_' prefix"), e.getMessage)
   }
 
   test("merge-mode refresh: full lifecycle parity, untouched files survive") {
